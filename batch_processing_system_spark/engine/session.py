@@ -100,37 +100,4 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    # --- Delta Lake lane (VERDICT r13 item 5; gated per ADVICE r14):
-    # when delta-spark is installed (NOT this container — no
-    # pip/network) AND the user opts in with SPARK_DELTA=1, wire its
-    # SQL extension + catalog and jars so pipeline/deltastore.py's
-    # MERGE INTO lane actually executes (the package alone isn't
-    # enough — without these configs every .format("delta") read/write
-    # fails). The env flag is the blast-radius fence: on an offline
-    # host with delta-spark installed but a cold ivy cache, Maven
-    # resolution inside configure_spark_with_delta_pip would fail/hang
-    # getOrCreate for EVERY session, not just the Delta lane — opt-in
-    # keeps a broken delta install from taking down unrelated queries.
-    # The recipe lives in the verify skill.
-    # CONSTRAINT (ADVICE r15): getOrCreate reuses any existing session
-    # as-is, so SPARK_DELTA=1 must be set BEFORE the first session is
-    # created in the process — a pre-flag session has no Delta
-    # extension, and deltastore.delta_available() now cross-checks the
-    # active session's spark.sql.extensions to fail with the clear
-    # require_delta message instead of a catalog error.
-    if os.environ.get("SPARK_DELTA") == "1":
-        try:
-            from delta import configure_spark_with_delta_pip
-
-            builder = configure_spark_with_delta_pip(
-                builder.config(
-                    "spark.sql.extensions",
-                    "io.delta.sql.DeltaSparkSessionExtension",
-                ).config(
-                    "spark.sql.catalog.spark_catalog",
-                    "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-                )
-            )
-        except ImportError:
-            pass
     return builder.getOrCreate()

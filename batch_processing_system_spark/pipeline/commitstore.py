@@ -2,13 +2,15 @@
 upsert path (/root/reference/README.md:100-102 $set/$push semantics;
 SURVEY §7 H2).
 
-``storage.upsert_documents_partitioned`` rewrites touched buckets in
-place with dynamic partition overwrite; correct and partition-scoped,
-but on plain parquet the delete-and-rewrite window is not atomic — a
-job that dies mid-commit can expose partial bucket state to readers.
-This module closes that window with the standard table-format commit
-protocol (the same shape Delta Lake / Iceberg use), built from two
-filesystem primitives only:
+Documents are hash-bucketed on ``_id``:
+
+    bucket(_id) = pmod(xxhash64(_id), n_buckets)
+
+so an upsert reads and rewrites only the buckets holding updated keys,
+with the merge itself being ``process.upsert_documents``. Rewriting a
+bucket in place is not atomic on plain parquet, so every write goes
+through the standard table-format commit protocol (the same shape
+Delta Lake / Iceberg use), built from two filesystem primitives only:
 
   - data files are IMMUTABLE: every writer writes to a fresh
     ``stage-<uuid>/`` directory, never touching live files;
@@ -42,8 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .process import upsert_documents
-from .storage import BUCKET_COL, bucket_of
 
+BUCKET_COL = "_bucket"
 _MANIFEST_RE = re.compile(r"^manifest-(\d{12})\.json$")
 
 
@@ -96,6 +98,10 @@ def _commit(root: str, manifest: dict) -> None:
         ) from None
     finally:
         os.unlink(tmp)
+
+
+def bucket_of(col, n_buckets: int):
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
 def _write_stage(df: DataFrame, root: str, n_buckets: int) -> tuple[str, list[int]]:

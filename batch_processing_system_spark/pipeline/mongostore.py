@@ -19,15 +19,12 @@ and issues ONE unordered ``bulk_write`` — so nothing document-sized
 ever routes through the driver, and per-partition batching matches
 how one would drive a real cluster-side sink.
 
-AVAILABILITY IN THIS CONTAINER: ``import pymongo`` fails and package
-installation is unavailable (no pip/network) — mirrored from the
-Delta lane's posture (pipeline/deltastore.py). The op-building logic
+AVAILABILITY: ``pymongo`` is an optional dependency; without it
+``require_pymongo`` raises a named error. The op-building logic
 (pure data → (filter, update) pairs) is fully tested against a
-file-backed fake sink; the pymongo translation is the only
-untested-here line and activates wherever the driver is installed.
-Engine-native alternatives carrying the same semantics today:
-pipeline/storage.py (bucket-scoped parquet MERGE) and
-pipeline/commitstore.py (versioned manifest store).
+file-backed fake sink; the pymongo translation is the only line that
+needs the driver installed. The engine-native store carrying the same
+semantics is pipeline/commitstore.py (versioned manifest store).
 """
 
 from __future__ import annotations
@@ -52,8 +49,8 @@ def require_pymongo() -> None:
     if not pymongo_available():
         raise NotImplementedError(
             "mongostore: the 'pymongo' driver is not installed in this "
-            "environment; use pipeline/storage.py or "
-            "pipeline/commitstore.py as the engine-native document store"
+            "environment; use pipeline/commitstore.py as the "
+            "engine-native document store"
         )
 
 

@@ -108,9 +108,10 @@ def upsert_documents(docs: DataFrame, updates: DataFrame) -> DataFrame:
     from at-least-once processing, without relying on write ordering
     across two non-atomic tables.
 
-    Join-rebuild rewrites the snapshot; at 100 TB the same expressions
-    run inside Delta ``MERGE INTO`` or a partition-scoped rewrite
-    (SURVEY §7 H2) — semantics identical, tested here engine-native.
+    Join-rebuild rewrites whatever snapshot it is given: the parquet
+    state of the CLI/HTTP surfaces, or only the touched buckets of the
+    manifest-committed store (``commitstore.upsert_store``, SURVEY §7
+    H2). Every document transition after submit goes through it.
     """
     u = updates.select(
         F.col("custom_id").alias("u_id"),

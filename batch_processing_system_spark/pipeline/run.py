@@ -27,8 +27,8 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .process import process_results
-from .schemas import status_field, status_values
+from .process import process_results, upsert_documents
+from .schemas import EVENT_RESPONSE_ITEM, status_field, status_values
 from .state import active_jobs, apply_poll_results, new_job_row
 from .validate import validate_submission
 
@@ -95,6 +95,19 @@ class SubmissionOutcome:
     # true error count, >= len(errors); len(errors) < total_errors
     # means the body was capped (the API layer surfaces both)
     total_errors: int = 0
+    # the cached upload scan behind jobs/marked_docs; the caller
+    # unpersists it once their writes have landed (or on a 400)
+    upload: DataFrame | None = None
+
+    def error_body(self) -> dict:
+        """The spec's 400 body: the first-N details, plus the truthful
+        total when the body was capped (see ERROR_CAP)."""
+        details = [{k: v for k, v in e.items() if v is not None} for e in self.errors]
+        body = {"error": "Validation Failed", "details": details}
+        if self.total_errors > len(details):
+            body["total_errors"] = self.total_errors
+            body["truncated"] = True
+        return body
 
 
 def submit_batch(
@@ -111,61 +124,67 @@ def submit_batch(
     """§3.1: validate → upload → create batch → persist job row →
     mark targeted docs in_progress → 202/400."""
     result = validate_submission(spark, jsonl_path, output_schema_json, docs)
-    # bounded-collect: limit(ERROR_CAP) caps the driver materialization
-    # regardless of how many lines of the upload are malformed
-    # (VERDICT r12 item 3); (line, type) order makes the retained
-    # prefix deterministic. The true total is recounted only when the
-    # head actually hit the cap — the common small-error case costs a
-    # single pass.
-    capped = result.errors.orderBy(
-        F.col("line").asc_nulls_first(), "type"
-    ).limit(ERROR_CAP)
-    # bounded-collect: at most ERROR_CAP rows by the limit above
-    errors = [r.asDict() for r in capped.collect()]
-    if errors:
-        total = (
-            result.errors.count() if len(errors) == ERROR_CAP else len(errors)
-        )
-        _json_log(
-            "ERROR",
-            "submission_rejected",
-            f"validation failed ({total} error(s), first {len(errors)} returned)",
-            job_id=job_id,
-        )
-        return SubmissionOutcome(None, None, errors, None, total_errors=total)
+    try:
+        # bounded-collect: limit(ERROR_CAP) caps the driver materialization
+        # regardless of how many lines of the upload are malformed;
+        # (line, type) order makes the retained prefix deterministic. The
+        # true total is recounted only when the head actually hit the
+        # cap — the common small-error case costs a single pass.
+        capped = result.errors.orderBy(
+            F.col("line").asc_nulls_first(), "type"
+        ).limit(ERROR_CAP)
+        # bounded-collect: at most ERROR_CAP rows by the limit above
+        errors = [r.asDict() for r in capped.collect()]
+        if errors:
+            total = (
+                result.errors.count() if len(errors) == ERROR_CAP else len(errors)
+            )
+            _json_log(
+                "ERROR",
+                "submission_rejected",
+                f"validation failed ({total} error(s), first {len(errors)} returned)",
+                job_id=job_id,
+            )
+            return SubmissionOutcome(
+                None, None, errors, None, total_errors=total, upload=result.upload
+            )
 
-    input_file_id = with_retry(lambda: remote.upload(jsonl_path))
-    batch_id = with_retry(lambda: remote.create_batch(input_file_id))
-    jobs = new_job_row(
-        spark,
-        job_id,
-        batch_id,
-        input_file_id,
-        output_schema_json,
-        mongodb_uri,
-        collection_name,
-        result.model or "",
-        now,
-    )
-
-    # §3.1 step 6 — $set ai_status='in_progress' on each targeted doc
-    # (/root/reference/README.md:77), as a semi-join-driven rebuild.
-    targeted = result.valid_requests.select(F.col("custom_id").alias("t_id")).distinct()
-    sfield = status_field()
-    s_in_progress, _, _ = status_values()
-    marked = (
-        docs.join(targeted, docs["_id"] == F.col("t_id"), "left")
-        .withColumn(
-            sfield,
-            F.when(F.col("t_id").isNotNull(), F.lit(s_in_progress)).otherwise(
-                F.col(sfield)
-            ),
+        input_file_id = with_retry(lambda: remote.upload(jsonl_path))
+        batch_id = with_retry(lambda: remote.create_batch(input_file_id))
+        jobs = new_job_row(
+            spark,
+            job_id,
+            batch_id,
+            input_file_id,
+            output_schema_json,
+            mongodb_uri,
+            collection_name,
+            result.model or "",
+            now,
         )
-        .drop("t_id")
-    )
-    _json_log("INFO", "submission_accepted", "batch submitted", job_id=job_id,
-              openai_batch_id=batch_id)
-    return SubmissionOutcome(job_id, jobs, [], marked)
+
+        # §3.1 step 6 — $set ai_status='in_progress' on each targeted doc
+        # (reference README.md:77), as a semi-join-driven rebuild.
+        targeted = result.valid_requests.select(F.col("custom_id").alias("t_id")).distinct()
+        sfield = status_field()
+        s_in_progress, _, _ = status_values()
+        marked = (
+            docs.join(targeted, docs["_id"] == F.col("t_id"), "left")
+            .withColumn(
+                sfield,
+                F.when(F.col("t_id").isNotNull(), F.lit(s_in_progress)).otherwise(
+                    F.col(sfield)
+                ),
+            )
+            .drop("t_id")
+        )
+        _json_log("INFO", "submission_accepted", "batch submitted", job_id=job_id,
+                  openai_batch_id=batch_id)
+        return SubmissionOutcome(job_id, jobs, [], marked, upload=result.upload)
+    except BaseException:
+        # no outcome reaches the caller, so nobody else can release it
+        result.upload.unpersist()
+        raise
 
 
 def run_poll_cycle(
@@ -205,8 +224,9 @@ def run_poll_cycle(
     # the spec's recommended propagation also marks the job's OWN
     # in_progress target docs failed so they don't dangle forever.
     # The job's custom_ids are recovered from its input JSONL
-    # (input_file_id is persisted at submit), and the in_progress
-    # gate scopes the flip to docs this job actually holds.
+    # (input_file_id is persisted at submit) and applied as 'failed'
+    # updates with no item, so upsert_documents' in_progress gate
+    # scopes the flip to docs this job actually holds.
     for job_id, status in polled_rows:
         if status not in ("failed", "expired"):
             continue
@@ -217,26 +237,19 @@ def run_poll_cycle(
             _json_log("ERROR", "failed_job_doc_propagation_failed", str(exc),
                       job_id=job_id)
             continue
+        _, _, s_failed = status_values()
         targeted = (
             spark.read.text(in_path)
-            .select(F.get_json_object("value", "$.custom_id").alias("t_id"))
-            .filter(F.col("t_id").isNotNull())
+            .select(F.get_json_object("value", "$.custom_id").alias("custom_id"))
+            .filter(F.col("custom_id").isNotNull())
             .distinct()
-        )
-        sfield = status_field()
-        s_in_progress, _, s_failed = status_values()
-        docs = (
-            docs.join(F.broadcast(targeted), docs["_id"] == F.col("t_id"), "left")
-            .withColumn(
-                sfield,
-                F.when(
-                    F.col("t_id").isNotNull()
-                    & (F.col(sfield) == s_in_progress),
-                    F.lit(s_failed),
-                ).otherwise(F.col(sfield)),
+            .select(
+                "custom_id",
+                F.lit(s_failed).alias("new_status"),
+                F.lit(None).cast(EVENT_RESPONSE_ITEM).alias("new_item"),
             )
-            .drop("t_id")
         )
+        docs = upsert_documents(docs, targeted)
         _json_log("WARN", "job_failed_docs_marked", "remote batch "
                   f"{status}; targeted docs marked failed", job_id=job_id,
                   openai_batch_id=job["openai_batch_id"])

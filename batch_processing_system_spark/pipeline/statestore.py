@@ -24,8 +24,8 @@ def read_state(spark: SparkSession, path: str, schema) -> DataFrame:
 def rewrite_state(df: DataFrame, path: str) -> None:
     """Snapshot replace: materialize to <path>.new (reads the old
     snapshot while it still exists), then swap. The window between rm
-    and rename is the same non-atomic caveat as storage.py — a table
-    format closes it in production."""
+    and rename is not atomic; pipeline/commitstore.py's manifest commit
+    is the shape that closes it."""
     tmp = path + ".new"
     df.write.mode("overwrite").parquet(tmp)
     if os.path.exists(path):

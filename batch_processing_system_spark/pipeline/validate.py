@@ -33,6 +33,7 @@ class ValidationResult:
     valid_requests: DataFrame  # line_id + request fields, all checks passed
     errors: DataFrame  # VALIDATION_ERROR_SCHEMA records
     model: str | None  # the batch's single model (first line, W1 idiom)
+    upload: DataFrame  # the cached line scan every frame above reads
 
 
 def _error_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
@@ -49,6 +50,8 @@ def validate_submission(
 
     ``target_docs`` is the target collection scan (needs ``_id``).
     Returns the surviving request lines plus every structured error.
+    The upload is cached for the several passes over it; the caller
+    unpersists ``upload`` once nothing reads the result any more.
     """
     empty_errors = spark.createDataFrame([], VALIDATION_ERROR_SCHEMA)
 
@@ -124,4 +127,4 @@ def validate_submission(
         .join(target_docs.select(F.col("_id")), well_formed.custom_id == F.col("_id"), "left_semi")
         .drop("raw")
     )
-    return ValidationResult(valid_requests=valid, errors=errors, model=model)
+    return ValidationResult(valid_requests=valid, errors=errors, model=model, upload=lines)

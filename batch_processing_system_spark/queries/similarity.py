@@ -1304,8 +1304,7 @@ def r57_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounding ever occurs and the per-pair sums (and argmin, and the
     # inertia built from them) are value-identical to the exploded
     # form — asserted by exceptAll on (vec_id, cid, dist) at sf0.1.
-    # The per-dim layout the centroid RECOMPUTE needs is derived from
-    # the k-row array table by posexplode (k×64 rows, trivial).
+    # The centroid RECOMPUTE still averages the per-dim point table e.
     ev = (
         emb.select(
             "vec_id",
@@ -1328,15 +1327,12 @@ def r57_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assign = None
     for _ in range(_KM_ITERS):
-        c = cent.select(
-            "cid", F.posexplode("cs").alias("dim", "c")
-        )
         d = ev.crossJoin(F.broadcast(cent)).select(
             "vec_id", "cid", F.expr(_SQDIST).alias("dist")
         )
         # no per-round assign checkpoint (round-16): the round's lineage
-        # is already truncated by the c checkpoint below — assign sits
-        # one join above two checkpointed inputs (e, c), so the only
+        # is already truncated by the cent checkpoint below — assign sits
+        # one join above two checkpointed inputs (ev, cent), so the only
         # recompute skipping it costs is ONE extra evaluation of the
         # final round's assignment in the closing aggregate, which
         # measured cheaper than materializing every round's assignment

@@ -7,7 +7,8 @@ land in a directory (the "downloaded outputs" boundary), a file
 stream picks them up, and each micro-batch applies
 
     build_update_records (branch → extract → validate)
-      → partition-scoped MERGE into the bucketed document store
+      → one manifest commit into the bucketed document store
+        (pipeline/commitstore.py)
 
 so documents flip to completed/failed within a trigger interval of
 the file arriving instead of a poll interval later. State stays
@@ -19,56 +20,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..pipeline import commitstore
 from ..pipeline.process import build_update_records
 from ..pipeline.schemas import RESULT_LINE_SCHEMA
-from ..pipeline.storage import upsert_documents_partitioned
 
 
 def result_file_stream(spark: SparkSession, incoming_dir: str) -> DataFrame:
     """File-source stream of result/error lines (spec's output+error
     files unioned by schema: both shapes fit RESULT_LINE_SCHEMA)."""
     return spark.readStream.schema(RESULT_LINE_SCHEMA).json(incoming_dir)
-
-
-def stream_results_into_documents(
-    spark: SparkSession,
-    incoming_dir: str,
-    docs_path: str,
-    output_schema_json: str,
-    checkpoint: str,
-    now=None,
-    n_buckets: int = 64,
-    strict: bool = False,
-):
-    """Wire the stream to the bucketed store. Returns the
-    DataStreamWriter (caller picks the trigger: availableNow for
-    catch-up runs, processingTime for the reference's 5-minute cadence,
-    /root/reference/README.md:145).
-
-    ``now``: the spec stamps each pushed event_response item with the
-    CURRENT timestamp ($push {..., updated: <current_timestamp>}), so
-    by default every micro-batch evaluates its own wall-clock time at
-    merge. Pass a fixed datetime (or a zero-arg callable) to pin it for
-    deterministic tests/replays."""
-    outcomes = result_file_stream(spark, incoming_dir)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if now is None:
-            from datetime import datetime, timezone
-
-            batch_now = datetime.now(timezone.utc)
-        elif callable(now):
-            batch_now = now()
-        else:
-            batch_now = now
-        updates = build_update_records(batch_df, output_schema_json, batch_now, strict=strict)
-        upsert_documents_partitioned(
-            batch_df.sparkSession, docs_path, updates, n_buckets=n_buckets
-        )
-
-    return outcomes.writeStream.foreachBatch(merge_batch).option(
-        "checkpointLocation", checkpoint
-    )
 
 
 def stream_results_into_store(
@@ -80,9 +40,17 @@ def stream_results_into_store(
     now=None,
     strict: bool = False,
 ):
-    """The crash-safe twin of ``stream_results_into_documents``: each
-    micro-batch MERGEs into the manifest-committed store
-    (pipeline/commitstore.py) instead of overwrite-in-place buckets.
+    """Wire the stream to the manifest-committed store
+    (pipeline/commitstore.py). Returns the DataStreamWriter (caller
+    picks the trigger: availableNow for catch-up runs, processingTime
+    for the reference's 5-minute cadence,
+    /root/reference/README.md:145).
+
+    ``now``: the spec stamps each pushed event_response item with the
+    CURRENT timestamp ($push {..., updated: <current_timestamp>}), so
+    by default every micro-batch evaluates its own wall-clock time at
+    merge. Pass a fixed datetime (or a zero-arg callable) to pin it for
+    deterministic tests/replays.
 
     The composition gives streaming exactly-once EFFECTS from Spark's
     at-least-once foreachBatch contract with no sink-side dedup log:
@@ -95,8 +63,6 @@ def stream_results_into_store(
       upsert gate makes a no-op (a new manifest version with identical
       content, not a double-push).
     """
-    from ..pipeline.commitstore import upsert_store
-
     outcomes = result_file_stream(spark, incoming_dir)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -111,7 +77,7 @@ def stream_results_into_store(
         updates = build_update_records(
             batch_df, output_schema_json, batch_now, strict=strict
         )
-        upsert_store(batch_df.sparkSession, store_root, updates)
+        commitstore.upsert_store(batch_df.sparkSession, store_root, updates)
 
     return outcomes.writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint

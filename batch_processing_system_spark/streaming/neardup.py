@@ -67,11 +67,6 @@ _WB_MIS_THRESHOLD = 100_000
 #: fails loudly rather than looping forever.
 _MIS_MAX_ROUNDS = 128
 
-#: introspection: elimination rounds the most recent
-#: _decisions_distributed call took to converge (read by
-#: tools/lfmis_megabatch_probe.py and SCALE measurements; not an API)
-LAST_LFMIS_ROUNDS: int | None = None
-
 #: MinHash family drawn from SEED alone at import (VERDICT r13 item 2
 #: refactor): module-level affine coefficients over a 31-bit Mersenne
 #: prime, applied to murmur3 shingle hashes as pure JVM expressions.
@@ -280,11 +275,9 @@ def _decisions_distributed(
         wb.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=True)
 
-    global LAST_LFMIS_ROUNDS
     edges = sym
     rejected = spark.createDataFrame([], "doc_id bigint")
     converged = False
-    LAST_LFMIS_ROUNDS = 0
     for _ in range(_MIS_MAX_ROUNDS):
         if edges.isEmpty():
             # checked at the TOP of the round so a graph whose last
@@ -293,7 +286,6 @@ def _decisions_distributed(
             # spurious non-convergence on that boundary)
             converged = True
             break
-        LAST_LFMIS_ROUNDS += 1
         minnb = edges.groupBy("a").agg(F.min("b").alias("mn"))
         kept_round = minnb.filter(F.col("a") < F.col("mn")).select(
             F.col("a").alias("doc_id")

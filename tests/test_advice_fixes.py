@@ -123,34 +123,3 @@ class TestResultPointerPersistenceAndIdempotency:
         state = {r["_id"]: r for r in docs3.collect()}
         assert len(state["doc-000"]["event_response"]) == 1  # not doubled
         assert state["doc-000"]["ai_status"] == "completed"
-
-
-class TestOverwriteModeRestored:
-    def test_conf_restored_after_partitioned_upsert(self, spark, tmp_path):
-        from batch_processing_system_spark.pipeline.storage import (
-            upsert_documents_partitioned,
-            write_documents_bucketed,
-        )
-
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(key, None)
-        try:
-            spark.conf.set(key, "static")
-            docs = spark.createDataFrame(
-                [(f"doc-{i:03d}", "pending", [], "{}") for i in range(10)],
-                DOCUMENT_SCHEMA,
-            )
-            path = str(tmp_path / "docs")
-            write_documents_bucketed(docs, path, n_buckets=4)
-            updates = spark.createDataFrame(
-                [("doc-003", "completed", None)],
-                "custom_id string, new_status string, "
-                "new_item struct<event_response:string, updated:timestamp>",
-            )
-            upsert_documents_partitioned(spark, path, updates, n_buckets=4)
-            assert spark.conf.get(key) == "static"
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)

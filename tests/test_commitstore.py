@@ -8,7 +8,6 @@ import os
 from datetime import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from batch_processing_system_spark.pipeline.commitstore import (
     CommitConflict,
@@ -45,120 +44,6 @@ def _snapshot(spark, root, version=None):
         r["_id"]: (r["ai_status"], len(r["event_response"]))
         for r in read_store(spark, root, version).collect()
     }
-
-
-class TestBackendMatrix:
-    """The S5 upsert semantics parametrized over both store backends:
-    the engine-native commitstore (always available) and the Delta
-    MERGE INTO lane (pipeline/deltastore.py) wherever delta-spark is
-    importable. In this container delta-spark is NOT installed and
-    cannot be (no pip/network — recorded in deltastore's docstring and
-    STATUS.md), so that leg skips with the named reason; the matrix is
-    in place for an environment that ships the package."""
-
-    @pytest.fixture(params=["commitstore", "delta"])
-    def backend(self, request):
-        if request.param == "delta":
-            from batch_processing_system_spark.pipeline.deltastore import (
-                delta_available,
-            )
-
-            if not delta_available():
-                pytest.skip(
-                    "delta-spark not installed in this container "
-                    "(no pip/network) or SPARK_DELTA=1 opt-in unset; "
-                    "commitstore is system of record"
-                )
-        return request.param
-
-    def _roundtrip(self, spark, root, backend):
-        if backend == "commitstore":
-            init_store(_docs(spark), root, n_buckets=8)
-            upsert_store(spark, root, _updates(spark, [3, 7]))
-            return _snapshot(spark, root)
-        from batch_processing_system_spark.pipeline import deltastore as ds
-
-        ds.init_store(_docs(spark), root)
-        ds.upsert_store(spark, root, _updates(spark, [3, 7]))
-        return {
-            r["_id"]: (r["ai_status"], len(r["event_response"]))
-            for r in ds.read_store(spark, root).collect()
-        }
-
-    def test_upsert_semantics_match(self, spark, tmp_path, backend):
-        state = self._roundtrip(spark, str(tmp_path / "store"), backend)
-        assert len(state) == 50
-        assert state["doc-0003"] == ("completed", 1)
-        assert state["doc-0007"] == ("completed", 1)
-        assert state["doc-0000"] == ("in_progress", 0)
-
-    def test_delta_lane_raises_named_error_when_absent(self, spark, tmp_path):
-        from batch_processing_system_spark.pipeline import deltastore as ds
-
-        if ds.delta_available():  # pragma: no cover - not this container
-            pytest.skip("delta present: the matrix leg above covers it")
-        with pytest.raises(NotImplementedError, match="delta-spark"):
-            ds.init_store(_docs(spark), str(tmp_path / "d"))
-
-    def test_delta_skip_reason_is_import_gate_not_breakage(self, monkeypatch):
-        """VERDICT r14 item 6: pin WHY the Delta leg skips in this
-        container — the gate is (a) the SPARK_DELTA=1 opt-in flag and
-        (b) the package import, not a broken code path. With the flag
-        forced on, availability is decided purely by ``import delta``:
-        if the import raises here, unavailable; if some future
-        container ships the wheel, the same gate flips to available
-        with no code change."""
-        from batch_processing_system_spark.pipeline import deltastore as ds
-
-        monkeypatch.delenv("SPARK_DELTA", raising=False)
-        assert ds.delta_available() is False  # flag unset => gated off
-
-        monkeypatch.setenv("SPARK_DELTA", "1")
-        try:
-            import delta  # noqa: F401
-
-            importable = True
-        except Exception:
-            importable = False
-        if not importable:
-            assert ds.delta_available() is False
-        else:  # pragma: no cover - not this container
-            # importable: availability additionally requires the ACTIVE
-            # session (if any) to carry the Delta extension (ADVICE r15)
-            from pyspark.sql import SparkSession
-
-            active = SparkSession.getActiveSession()
-            exts = (
-                (active.conf.get("spark.sql.extensions", "") or "")
-                if active is not None
-                else ""
-            )
-            assert ds.delta_available() is (
-                active is None or "DeltaSparkSessionExtension" in exts
-            )
-
-    def test_delta_unavailable_when_active_session_lacks_extension(
-        self, spark, monkeypatch
-    ):
-        """ADVICE r15: SPARK_DELTA=1 set AFTER a session exists must
-        NOT report the lane live — getOrCreate returns the pre-flag
-        session (no Delta extension), so MERGE INTO would fail with a
-        confusing catalog error. delta_available() cross-checks the
-        active session's spark.sql.extensions; with the import gate
-        faked open and the tests' non-delta session active, the lane
-        must read unavailable and require_delta must name the flag
-        constraint."""
-        import sys
-        import types
-
-        from batch_processing_system_spark.pipeline import deltastore as ds
-
-        monkeypatch.setenv("SPARK_DELTA", "1")
-        monkeypatch.setitem(sys.modules, "delta", types.ModuleType("delta"))
-        assert spark.sparkContext is not None  # session is active
-        assert ds.delta_available() is False
-        with pytest.raises(NotImplementedError, match="BEFORE the first"):
-            ds.require_delta()
 
 
 class TestCommitStoreBasics:

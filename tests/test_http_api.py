@@ -109,6 +109,32 @@ class TestProcessBatchEndpoint:
         assert body["details"][0]["type"] == "model_mismatch"
         assert body["details"][0]["line"] == 2
 
+    def test_submits_leave_no_persistent_rdds(self, spark, served):
+        """A long-running server must release each request's cached
+        upload: accepted and rejected submits alike leave no new
+        persistent RDD behind."""
+        url, _, _ = served
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        bad_model = json.dumps(good_request(1, model="other-model"))
+        for jsonl, expected in (
+            (json.dumps(good_request(0)), 202),
+            (json.dumps(good_request(0)) + "\n" + bad_model, 400),
+            (json.dumps(good_request(2)), 202),
+            (json.dumps(good_request(99)), 400),  # unknown custom_id
+        ):
+            status, _ = post(
+                f"{url}/process-batch",
+                {
+                    "jsonl_file": jsonl.encode(),
+                    "output_schema_json": SCHEMA_JSON.encode(),
+                    "mongodb_uri": b"store://local",
+                    "collection_name": b"documents",
+                },
+            )
+            assert status == expected
+        assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
     def test_missing_field_and_unknown_route(self, served):
         url, _, _ = served
         status, body = post(

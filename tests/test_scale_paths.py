@@ -1,5 +1,6 @@
-"""Tests for the 100 TB-path mechanisms: partition-scoped upsert
-(touches only affected buckets) and skew-salting equivalences."""
+"""Tests for the 100 TB-path mechanisms: partition-scoped upsert into
+the committed store (touches only affected buckets) and skew-salting
+equivalences."""
 
 from __future__ import annotations
 
@@ -12,11 +13,14 @@ from batch_processing_system_spark.engine.skew import (
     salted_aggregate,
     salted_broadcast_left,
 )
-from batch_processing_system_spark.pipeline.schemas import DOCUMENT_SCHEMA
-from batch_processing_system_spark.pipeline.storage import (
-    upsert_documents_partitioned,
-    write_documents_bucketed,
+from batch_processing_system_spark.pipeline.commitstore import (
+    _read_manifest,
+    current_version,
+    init_store,
+    read_store,
+    upsert_store,
 )
+from batch_processing_system_spark.pipeline.schemas import DOCUMENT_SCHEMA
 
 from .conftest import SF_SMALL
 
@@ -24,31 +28,38 @@ T0 = datetime(2024, 1, 1, 12, 0, 0)
 
 
 class TestPartitionedUpsert:
-    def _seed(self, spark, path, n=200, n_buckets=8):
+    """Partition scoping of the committed store's upsert: only buckets
+    holding updated keys are staged; every other bucket keeps its
+    manifest entry."""
+
+    _UPDATE_SCHEMA = (
+        "custom_id string, new_status string, "
+        "new_item struct<event_response:string, updated:timestamp>"
+    )
+
+    def _seed(self, spark, root, n=200, n_buckets=8):
         # in_progress = the state targeted docs are in when results
         # arrive (submit marks them; the upsert gate requires it)
         docs = spark.createDataFrame(
             [(f"doc-{i:04d}", "in_progress", [], "{}") for i in range(n)],
             DOCUMENT_SCHEMA,
         )
-        write_documents_bucketed(docs, path, n_buckets)
-        return docs
+        init_store(docs, root, n_buckets)
 
     def test_merge_semantics_and_bucket_scoping(self, spark, tmp_path):
-        path = str(tmp_path / "docs")
-        self._seed(spark, path, n=200, n_buckets=8)
+        root = str(tmp_path / "store")
+        self._seed(spark, root, n=200, n_buckets=8)
         updates = spark.createDataFrame(
             [
                 ("doc-0003", "completed", ('{"v":3}', T0)),
                 ("doc-0007", "failed", None),
             ],
-            "custom_id string, new_status string, "
-            "new_item struct<event_response:string, updated:timestamp>",
+            self._UPDATE_SCHEMA,
         )
-        touched = upsert_documents_partitioned(spark, path, updates, n_buckets=8)
+        touched = upsert_store(spark, root, updates)
         assert 1 <= len(touched) <= 2  # only the buckets holding the 2 keys
 
-        state = {r["_id"]: r for r in spark.read.parquet(path).collect()}
+        state = {r["_id"]: r for r in read_store(spark, root).collect()}
         assert len(state) == 200  # no rows lost
         assert state["doc-0003"]["ai_status"] == "completed"
         assert len(state["doc-0003"]["event_response"]) == 1
@@ -57,38 +68,27 @@ class TestPartitionedUpsert:
         assert state["doc-0000"]["ai_status"] == "in_progress"  # untouched
 
     def test_untouched_bucket_files_not_rewritten(self, spark, tmp_path):
-        path = str(tmp_path / "docs")
-        self._seed(spark, path, n=200, n_buckets=8)
-        before = {
-            d: sorted(os.listdir(os.path.join(path, d)))
-            for d in os.listdir(path)
-            if d.startswith("_bucket=")
-        }
+        root = str(tmp_path / "store")
+        self._seed(spark, root, n=200, n_buckets=8)
+        before = _read_manifest(root, current_version(root))["buckets"]
         updates = spark.createDataFrame(
-            [("doc-0003", "completed", ('{"v":3}', T0))],
-            "custom_id string, new_status string, "
-            "new_item struct<event_response:string, updated:timestamp>",
+            [("doc-0003", "completed", ('{"v":3}', T0))], self._UPDATE_SCHEMA
         )
-        touched = upsert_documents_partitioned(spark, path, updates, n_buckets=8)
-        after = {
-            d: sorted(os.listdir(os.path.join(path, d)))
-            for d in os.listdir(path)
-            if d.startswith("_bucket=")
-        }
-        unchanged = [d for d in before if int(d.split("=")[1]) not in touched]
+        touched = upsert_store(spark, root, updates)
+        after = _read_manifest(root, current_version(root))["buckets"]
+        unchanged = [b for b in before if int(b) not in touched]
         assert unchanged, "expected at least one untouched bucket"
-        for d in unchanged:
-            assert before[d] == after[d], f"untouched bucket {d} was rewritten"
+        for b in unchanged:
+            assert before[b] == after[b], f"untouched bucket {b} was rewritten"
+        for b in touched:
+            assert before[str(b)] != after[str(b)]
 
     def test_empty_updates_is_noop(self, spark, tmp_path):
-        path = str(tmp_path / "docs")
-        self._seed(spark, path, n=20, n_buckets=4)
-        empty = spark.createDataFrame(
-            [],
-            "custom_id string, new_status string, "
-            "new_item struct<event_response:string, updated:timestamp>",
-        )
-        assert upsert_documents_partitioned(spark, path, empty, n_buckets=4) == []
+        root = str(tmp_path / "store")
+        self._seed(spark, root, n=20, n_buckets=4)
+        empty = spark.createDataFrame([], self._UPDATE_SCHEMA)
+        assert upsert_store(spark, root, empty) == []
+        assert current_version(root) == 1  # nothing committed
 
 
 class TestBucketedJoin:
