@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -193,3 +194,38 @@ def load_table(
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
     return tuple(load_table(spark, sf_dir, n) for n in names)
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """A DataFrame of a few driver-side rows that never leaves the JVM.
+
+    ``spark.createDataFrame(<list>, schema)`` pickles the rows into a
+    PythonRDD, so even an empty or one-row frame runs Python tasks and
+    starts the worker pool. Here the rows become literals instead:
+    ``inline`` over an array of structs on a one-row, one-partition
+    relation; no rows is a row of typed NULLs behind ``lit(False)``,
+    which the optimizer prunes to an empty local scan.
+
+    ``rows`` are tuples of scalar values (``None``, str, int, bool,
+    ``datetime``, ...) in ``schema`` field order. Each is cast to its
+    declared type, so the column names and data types equal
+    ``schema``; nullability may be narrower, since a column no row
+    leaves ``None`` comes out non-nullable. Meant for the small lists
+    a request or a tick holds: each value is a node in the plan.
+    """
+    one = spark.range(0, 1, 1, 1)
+    fields = schema.fields
+    if not rows:
+        return one.select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields]
+        ).where(F.lit(False))
+    structs = [
+        F.struct(
+            *[F.lit(v).cast(f.dataType).alias(f.name)
+              for v, f in zip(row, fields, strict=True)]
+        )
+        for row in rows
+    ]
+    return one.select(F.inline(F.array(*structs)))

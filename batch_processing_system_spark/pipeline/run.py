@@ -27,8 +27,9 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine.io import local_frame
 from .process import process_results, upsert_documents
-from .schemas import EVENT_RESPONSE_ITEM, status_field, status_values
+from .schemas import EVENT_RESPONSE_ITEM, POLL_RESULT_SCHEMA, status_field, status_values
 from .state import active_jobs, apply_poll_results, new_job_row
 from .validate import validate_submission
 
@@ -217,7 +218,7 @@ def run_poll_cycle(
         polled_rows.append((job["_id"], status))
 
     if polled_rows:
-        polled = spark.createDataFrame(polled_rows, "_id string, openai_status string")
+        polled = local_frame(spark, polled_rows, POLL_RESULT_SCHEMA)
         jobs = apply_poll_results(jobs, polled, now)
 
     # §5.2 failed/expired: the job row is already 'failed' via F4;

@@ -91,6 +91,15 @@ BATCH_JOB_SCHEMA = T.StructType(
     ]
 )
 
+# One poll tick's remote statuses, one row per polled job: the input of
+# state.apply_poll_results.
+POLL_RESULT_SCHEMA = T.StructType(
+    [
+        T.StructField("_id", T.StringType()),
+        T.StructField("openai_status", T.StringType()),
+    ]
+)
+
 # B4 — target document (/root/reference/README.md:129-138).
 EVENT_RESPONSE_ITEM = T.StructType(
     [

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..engine.io import local_frame
 from .schemas import BATCH_JOB_SCHEMA, INACTIVE_INTERNAL, REMOTE_TO_INTERNAL
 
 
@@ -46,7 +47,7 @@ def new_job_row(
         now,
         now,
     )
-    return spark.createDataFrame([row], BATCH_JOB_SCHEMA)
+    return local_frame(spark, [row], BATCH_JOB_SCHEMA)
 
 
 def active_jobs(jobs: DataFrame) -> DataFrame:

@@ -14,11 +14,17 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..engine.io import local_frame
+
 
 def read_state(spark: SparkSession, path: str, schema) -> DataFrame:
+    """The snapshot at ``path`` read with ``schema``; a missing path
+    reads as an empty table. That empty frame is JVM-only
+    (``engine.io.local_frame``): a first submit or a tick on a fresh
+    state dir runs no Python task for it."""
     if os.path.exists(path):
         return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def rewrite_state(df: DataFrame, path: str) -> None:

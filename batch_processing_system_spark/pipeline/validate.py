@@ -23,6 +23,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine.io import local_frame
 from ..functions.json_schema import compile_json_schema
 from ..sources.jsonl import read_jsonl_with_lines
 from .schemas import REQUEST_LINE_SCHEMA, VALIDATION_ERROR_SCHEMA
@@ -34,10 +35,6 @@ class ValidationResult:
     errors: DataFrame  # VALIDATION_ERROR_SCHEMA records
     model: str | None  # the batch's single model (first line, W1 idiom)
     upload: DataFrame  # the cached line scan every frame above reads
-
-
-def _error_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    return spark.createDataFrame(rows, VALIDATION_ERROR_SCHEMA)
 
 
 def validate_submission(
@@ -53,17 +50,14 @@ def validate_submission(
     The upload is cached for the several passes over it; the caller
     unpersists ``upload`` once nothing reads the result any more.
     """
-    empty_errors = spark.createDataFrame([], VALIDATION_ERROR_SCHEMA)
-
     # U2 — schema well-formedness is a driver-side check; it gates the
     # whole submission (/root/reference/README.md:63).
     try:
         compile_json_schema(output_schema_json)
-        schema_errors = empty_errors
+        schema_error_rows = []
     except ValueError as exc:
-        schema_errors = _error_df(
-            spark, [("schema_validation_error", None, str(exc), "{}")]
-        )
+        schema_error_rows = [("schema_validation_error", None, str(exc), "{}")]
+    schema_errors = local_frame(spark, schema_error_rows, VALIDATION_ERROR_SCHEMA)
 
     lines = read_jsonl_with_lines(spark, jsonl_path, REQUEST_LINE_SCHEMA).cache()
 

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..engine.io import local_frame
 from .neardup import (
     BAND_SCHEMA,
     _band_table,
@@ -68,8 +69,13 @@ _DOC_SCHEMA = T.StructType(
 
 _DIGEST_SCHEMA = T.StructType([T.StructField("h", T.StringType())])
 
-ACCEPTED_SCHEMA = (
-    "doc_id bigint, lang string, n_tokens bigint, split string"
+ACCEPTED_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("n_tokens", T.LongType()),
+        T.StructField("split", T.StringType()),
+    ]
 )
 
 
@@ -81,11 +87,11 @@ def _read_store(
     have left partial rows there — they are not earlier arrivals)."""
     cols = [f.name for f in schema.fields]
     if not os.path.exists(path):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     try:
         df = spark.read.parquet(path)
     except Exception:  # dir exists but holds no committed footers yet
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return df.where(F.col("bid") != current_bid).select(*cols)
 
 
@@ -110,7 +116,7 @@ def curation_batch(
 
     batch = batch.localCheckpoint(eager=True)
     if batch.limit(1).count() == 0:
-        return spark.createDataFrame([], ACCEPTED_SCHEMA)
+        return local_frame(spark, [], ACCEPTED_SCHEMA)
 
     toks_arr = F.filter(F.split("text", " "), lambda w: w != "")
     feats = batch.select(

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..engine.io import local_frame
+
 INCOMING_DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -40,7 +42,7 @@ DIGEST_SCHEMA = T.StructType(
 def _read_parquet_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
     if os.path.exists(path):
         return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def dedup_batch(
