@@ -115,10 +115,10 @@ def cmd_poll(args: argparse.Namespace) -> int:
     new_jobs, new_docs = run_poll_cycle(spark, jobs, docs, remote, _parse_now(args.now))
     # Two non-atomic writes; a crash between them is survivable in
     # EITHER order because re-entry is idempotent at the data level:
-    # upsert_documents only transitions docs still 'in_progress', so a
-    # re-run of process_results cannot double-$push, and the
-    # output_file_id guard in run_poll_cycle skips the redundant
-    # re-download when the pointers did land.
+    # upsert_documents only transitions docs still 'in_progress', so
+    # re-applying a completed job's updates on the next tick cannot
+    # double-$push, and the output_file_id guard in run_poll_cycle skips
+    # the redundant re-download when the pointers did land.
     _rewrite_state(new_docs, args.docs)
     _rewrite_state(new_jobs, args.jobs)
 

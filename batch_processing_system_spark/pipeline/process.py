@@ -4,12 +4,11 @@ The per-line prose loop of the spec, re-expressed as one declarative
 dataflow over ALL lines at once:
 
     S2 scan(output) ∪ scan(error)            — O1 union
-      → J1 join target docs on custom_id
       → F4 branch response/error
       → F5 extract choices[0].message.content
       → F6/U1 validate vs the job's JSON Schema
-      → per-doc update records
-      → S5 upsert (join-rebuild MERGE)
+      → per-doc update records, applied for ALL the jobs a tick
+        finishes by one S5 upsert (join-rebuild MERGE)
 
 No collect(), no driver loop over lines — the reference's "For each
 result line" (:93) is exactly the parallelism Spark adds.
@@ -108,16 +107,21 @@ def upsert_documents(docs: DataFrame, updates: DataFrame) -> DataFrame:
     from at-least-once processing, without relying on write ordering
     across two non-atomic tables.
 
+    At most one update applies per document: ``updates`` may repeat a
+    custom_id (two jobs in one tick, two lines in one result file) and
+    is reduced to one row per custom_id before the join, so the document
+    count never changes. A failure (no item) beats an item; among items
+    the smallest wins, whatever order the rows arrive in.
+
     Join-rebuild rewrites whatever snapshot it is given: the parquet
     state of the CLI/HTTP surfaces, or only the touched buckets of the
     manifest-committed store (``commitstore.upsert_store``, SURVEY §7
     H2). Every document transition after submit goes through it.
     """
-    u = updates.select(
-        F.col("custom_id").alias("u_id"),
-        F.col("new_status"),
-        F.col("new_item"),
-    )
+    # False < True puts a failure first, then the smallest item
+    w = F.min(F.struct(F.col("new_item").isNotNull(), "new_item", "new_status"))
+    u = updates.groupBy(F.col("custom_id").alias("u_id")).agg(w.alias("w"))
+    u = u.select("u_id", "w.new_status", "w.new_item")
     sfield = status_field()
     s_in_progress, _, _ = status_values()
     merged = docs.join(u, docs["_id"] == u.u_id, "left")
@@ -138,14 +142,13 @@ def upsert_documents(docs: DataFrame, updates: DataFrame) -> DataFrame:
 
 def process_results(
     spark: SparkSession,
-    docs: DataFrame,
     output_path: str | None,
     error_path: str | None,
     output_schema_json: str,
     now,
-    strict: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Full §3.3 step: returns (new_docs_snapshot, update_records)."""
+) -> DataFrame:
+    """§3.3 for one job's result files: returns the update records.
+    The poll tick applies them, with every other finished job's, in one
+    ``upsert_documents``."""
     outcomes = load_outcomes(spark, output_path, error_path)
-    updates = build_update_records(outcomes, output_schema_json, now, strict=strict)
-    return upsert_documents(docs, updates), updates
+    return build_update_records(outcomes, output_schema_json, now)

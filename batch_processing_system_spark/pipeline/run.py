@@ -22,6 +22,7 @@ import logging
 import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
+from functools import reduce
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,7 +30,8 @@ from pyspark.sql import functions as F
 
 from ..engine.io import local_frame
 from .process import process_results, upsert_documents
-from .schemas import EVENT_RESPONSE_ITEM, POLL_RESULT_SCHEMA, status_field, status_values
+from .schemas import (COMPLETION_SCHEMA, EVENT_RESPONSE_ITEM, POLL_RESULT_SCHEMA,
+                      status_field, status_values)
 from .state import active_jobs, apply_poll_results, new_job_row
 from .validate import validate_submission
 
@@ -196,109 +198,102 @@ def run_poll_cycle(
     now,
 ) -> tuple[DataFrame, DataFrame]:
     """§3.2 + §3.3: one T1 tick. Polls every active job (F3 selection),
-    applies F4 transitions, and for remotely-completed jobs runs result
-    processing + upsert. Returns (new_jobs, new_docs).
+    applies F4 transitions, and gathers every finished job's document
+    updates (failed/expired propagation, completed jobs' results) into
+    ONE upsert_documents. Returns (new_jobs, new_docs).
 
-    The per-job remote fetch is a driver-side boundary exactly as in the
-    reference (:83) — job counts are thousands, not billions; the DATA
-    parallelism lives inside process_results.
+    The per-job remote calls are a driver-side boundary exactly as in
+    the reference (:83) — job counts are thousands, not billions; the
+    DATA parallelism lives inside process_results.
     """
     # bounded-collect: active JOB rows, not data rows — the spec's
     # driver-side poll boundary (:83); job counts are thousands, and
     # each row is a handful of id/status strings
-    act = [r.asDict() for r in active_jobs(jobs).collect()]
+    act = {r["_id"]: r.asDict() for r in active_jobs(jobs).collect()}
+    _, _, s_failed = status_values()
     polled_rows: list[tuple[str, str]] = []
-    for job in act:
+    updates: list[DataFrame] = []
+    completed: list[tuple[str, str | None, str | None]] = []
+    for job_id, job in act.items():
+        batch_id = job["openai_batch_id"]
         try:
-            status = with_retry(lambda j=job: remote.retrieve(j["openai_batch_id"]))
+            status = with_retry(lambda: remote.retrieve(batch_id))
         except Exception as exc:  # persistent failure: log, skip (:84)
-            _json_log("ERROR", "poll_failed", str(exc), job_id=job["_id"],
-                      openai_batch_id=job["openai_batch_id"])
+            _json_log("ERROR", "poll_failed", str(exc), job_id=job_id,
+                      openai_batch_id=batch_id)
             continue
-        polled_rows.append((job["_id"], status))
+        polled_rows.append((job_id, status))
+
+        if status in ("failed", "expired"):
+            # §5.2 failed/expired: the job row turns 'failed' via F4, and
+            # the job's OWN in_progress target docs are marked failed so
+            # they don't dangle forever. Its custom_ids come from its
+            # input JSONL (input_file_id is persisted at submit) as
+            # 'failed' updates with no item; upsert_documents' in_progress
+            # gate scopes the flip to docs this job actually holds.
+            try:
+                in_path = with_retry(lambda: remote.download(job["input_file_id"]))
+            except Exception as exc:  # keep the cycle alive (:84)
+                _json_log("ERROR", "failed_job_doc_propagation_failed", str(exc),
+                          job_id=job_id)
+                continue
+            updates.append(
+                spark.read.text(in_path)
+                .select(F.get_json_object("value", "$.custom_id").alias("custom_id"))
+                .filter(F.col("custom_id").isNotNull())
+                .select(
+                    "custom_id",
+                    F.lit(s_failed).alias("new_status"),
+                    F.lit(None).cast(EVENT_RESPONSE_ITEM).alias("new_item"),
+                )
+            )
+            _json_log("WARN", "job_failed_docs_marked", "remote batch "
+                      f"{status}; targeted docs marked failed", job_id=job_id,
+                      openai_batch_id=batch_id)
+        elif status == "completed":
+            # Idempotency guard: a non-null output_file_id means a previous
+            # cycle already fetched and processed this job's results —
+            # re-entering (e.g. after a crash between persisting the jobs
+            # table and the docs table) must not double-$push responses.
+            # The status flip below still runs so the row reaches 'completed'.
+            if job.get("output_file_id"):
+                out_path, err_path = job["output_file_id"], job["error_file_id"]
+                _json_log("INFO", "job_already_processed", "skipping re-process",
+                          job_id=job_id)
+            else:
+                try:
+                    out_path, err_path = with_retry(lambda: remote.result_files(batch_id))
+                except Exception as exc:  # stays 'processing' for the next tick (:84)
+                    _json_log("ERROR", "result_files_failed", str(exc), job_id=job_id,
+                              openai_batch_id=batch_id)
+                    continue
+                updates.append(
+                    process_results(spark, out_path, err_path, job["output_schema_json"], now)
+                )
+                if err_path:
+                    # spec: "Log any content retrieved from the
+                    # error_file_id (WARN)" — surfaced as a count, the
+                    # lines themselves already became 'failed' updates
+                    n_err = spark.read.text(err_path).count()
+                    _json_log("WARN", "error_file_content",
+                              f"{n_err} error line(s) in {err_path}",
+                              job_id=job_id, openai_batch_id=batch_id)
+            completed.append((job_id, out_path, err_path))
+            _json_log("INFO", "job_completed", "results processed", job_id=job_id)
 
     if polled_rows:
-        polled = local_frame(spark, polled_rows, POLL_RESULT_SCHEMA)
-        jobs = apply_poll_results(jobs, polled, now)
-
-    # §5.2 failed/expired: the job row is already 'failed' via F4;
-    # the spec's recommended propagation also marks the job's OWN
-    # in_progress target docs failed so they don't dangle forever.
-    # The job's custom_ids are recovered from its input JSONL
-    # (input_file_id is persisted at submit) and applied as 'failed'
-    # updates with no item, so upsert_documents' in_progress gate
-    # scopes the flip to docs this job actually holds.
-    for job_id, status in polled_rows:
-        if status not in ("failed", "expired"):
-            continue
-        job = next(j for j in act if j["_id"] == job_id)
-        try:
-            in_path = with_retry(lambda j=job: remote.download(j["input_file_id"]))
-        except Exception as exc:  # keep the cycle alive (:84)
-            _json_log("ERROR", "failed_job_doc_propagation_failed", str(exc),
-                      job_id=job_id)
-            continue
-        _, _, s_failed = status_values()
-        targeted = (
-            spark.read.text(in_path)
-            .select(F.get_json_object("value", "$.custom_id").alias("custom_id"))
-            .filter(F.col("custom_id").isNotNull())
-            .distinct()
-            .select(
-                "custom_id",
-                F.lit(s_failed).alias("new_status"),
-                F.lit(None).cast(EVENT_RESPONSE_ITEM).alias("new_item"),
-            )
-        )
-        docs = upsert_documents(docs, targeted)
-        _json_log("WARN", "job_failed_docs_marked", "remote batch "
-                  f"{status}; targeted docs marked failed", job_id=job_id,
-                  openai_batch_id=job["openai_batch_id"])
-
-    # §3.3 for each job whose remote status just became 'completed'.
-    for job_id, status in polled_rows:
-        if status != "completed":
-            continue
-        job = next(j for j in act if j["_id"] == job_id)
-        # Idempotency guard: a non-null output_file_id means a previous
-        # cycle already fetched and processed this job's results —
-        # re-entering (e.g. after a crash between persisting the jobs
-        # table and the docs table) must not double-$push responses.
-        # The status flip below still runs so the row reaches 'completed'.
-        if job.get("output_file_id"):
-            out_path, err_path = job["output_file_id"], job["error_file_id"]
-            _json_log("INFO", "job_already_processed", "skipping re-process",
-                      job_id=job_id)
-        else:
-            out_path, err_path = remote.result_files(job["openai_batch_id"])
-            docs, _ = process_results(
-                spark, docs, out_path, err_path, job["output_schema_json"], now
-            )
-            if err_path:
-                # spec: "Log any content retrieved from the
-                # error_file_id (WARN)" — surfaced as a count, the
-                # lines themselves already became 'failed' updates
-                n_err = spark.read.text(err_path).count()
-                _json_log("WARN", "error_file_content",
-                          f"{n_err} error line(s) in {err_path}",
-                          job_id=job_id,
-                          openai_batch_id=job["openai_batch_id"])
+        jobs = apply_poll_results(jobs, local_frame(spark, polled_rows, POLL_RESULT_SCHEMA), now)
+    if completed:
         # Persist the result-file pointers with the status flip (spec
         # schema fills output_file_id/error_file_id on completion) so a
         # crash after this point leaves a resumable, self-describing row.
-        this = F.col("_id") == job_id
-        jobs = (
-            jobs.withColumn(
-                "status", F.when(this, F.lit("completed")).otherwise(F.col("status"))
-            )
-            .withColumn(
-                "output_file_id",
-                F.when(this, F.lit(out_path)).otherwise(F.col("output_file_id")),
-            )
-            .withColumn(
-                "error_file_id",
-                F.when(this, F.lit(err_path)).otherwise(F.col("error_file_id")),
-            )
-        )
-        _json_log("INFO", "job_completed", "results processed", job_id=job_id)
+        done = local_frame(spark, completed, COMPLETION_SCHEMA).toDF("c_id", "c_out", "c_err")
+        flip = {"status": F.lit("completed"), "output_file_id": F.col("c_out"),
+                "error_file_id": F.col("c_err")}
+        jobs = jobs.join(done, jobs["_id"] == done["c_id"], "left").select(*[
+            F.when(F.col("c_id").isNotNull(), flip[c]).otherwise(F.col(c)).alias(c)
+            if c in flip else c for c in jobs.columns
+        ])
+    if updates:
+        docs = upsert_documents(docs, reduce(DataFrame.unionByName, updates))
     return jobs, docs

@@ -100,6 +100,12 @@ POLL_RESULT_SCHEMA = T.StructType(
     ]
 )
 
+# One tick's completed jobs with their result-file pointers: the rows
+# run_poll_cycle flips to 'completed'.
+COMPLETION_SCHEMA = T.StructType(
+    [BATCH_JOB_SCHEMA[c] for c in ("_id", "output_file_id", "error_file_id")]
+)
+
 # B4 — target document (/root/reference/README.md:129-138).
 EVENT_RESPONSE_ITEM = T.StructType(
     [
@@ -161,9 +167,6 @@ REMOTE_TO_INTERNAL = {
     "cancelled": "cancelled",
     "cancelling": "cancelling",
 }
-# kept as an alias for external callers of the old name
-TERMINAL_REMOTE = REMOTE_TO_INTERNAL
-TRANSIENT_REMOTE = ("validating", "in_progress", "finalizing")
 # internal statuses excluded from the poll cycle (F3 selection)
 INACTIVE_INTERNAL = ("completed", "failed", "cancelled")
 

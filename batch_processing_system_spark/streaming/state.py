@@ -19,6 +19,7 @@ Two idioms, mirroring the reference's externalized state machine
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
 from typing import Iterator
 
 import pandas as pd
@@ -26,7 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .. import pipeline  # noqa: F401  (schemas re-exported for callers)
+from ..pipeline.schemas import BATCH_JOB_SCHEMA
 from ..pipeline.state import apply_poll_results
+from ..pipeline.statestore import read_state, rewrite_state
 
 
 def poll_stream_to_state(updates_stream: DataFrame, jobs_path: str, checkpoint: str):
@@ -35,22 +38,13 @@ def poll_stream_to_state(updates_stream: DataFrame, jobs_path: str, checkpoint: 
     through the SAME transition expressions as the batch path — one
     state machine, two execution modes.
 
-    Snapshot-overwrite per micro-batch is the test-scale sink; a real
-    deployment points the same foreachBatch at Delta ``MERGE INTO``.
+    Each micro-batch replaces the snapshot through ``statestore`` — the
+    same read and swap the CLI and HTTP surfaces use.
     """
 
     def merge_batch(updates: DataFrame, batch_id: int) -> None:
-        spark = updates.sparkSession
-        jobs = spark.read.parquet(jobs_path)
-        from datetime import datetime, timezone
-
-        merged = apply_poll_results(jobs, updates, datetime.now(timezone.utc))
-        merged.write.mode("overwrite").parquet(jobs_path + "_next")
-        # atomic-ish swap at test scale; Delta/Iceberg gives real atomicity
-        import shutil
-
-        shutil.rmtree(jobs_path, ignore_errors=True)
-        shutil.move(jobs_path + "_next", jobs_path)
+        jobs = read_state(updates.sparkSession, jobs_path, BATCH_JOB_SCHEMA)
+        rewrite_state(apply_poll_results(jobs, updates, datetime.now(timezone.utc)), jobs_path)
 
     return (
         updates_stream.writeStream.foreachBatch(merge_batch)

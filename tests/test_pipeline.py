@@ -256,6 +256,147 @@ class TestRetry:
         assert jobs2.collect()[0]["status"] == "submitted"
 
 
+def _optimized_joins(df):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum(1 for line in plan.splitlines() if line.lstrip(" :+-").startswith("Join "))
+
+
+class TestOneMergePerTick:
+    """A tick applies every finished job's document updates in ONE
+    upsert_documents, and upsert_documents applies at most one update
+    per document: a failure beats an item, the smallest item beats the
+    rest, and the document count never changes."""
+
+    def _state(self, spark, tmp_path, n_docs, targets):
+        """Docs and jobs snapshots read back from parquet, as the CLI and
+        the server do. ``targets`` maps job id ``job-k`` to the doc
+        numbers its upload named; those docs are in_progress, the rest
+        pending. Job ``job-k`` has batch ``b-k`` and input file ``f-k``."""
+        from batch_processing_system_spark.pipeline.schemas import BATCH_JOB_SCHEMA
+
+        marked = {i for ids in targets.values() for i in ids}
+        docs = [
+            (f"doc-{i:03d}", "in_progress" if i in marked else "pending", [], "{}")
+            for i in range(n_docs)
+        ]
+        remote = FakeRemote()
+        jobs = []
+        for job_id, ids in targets.items():
+            k = job_id.split("-")[1]
+            inputs = _write_jsonl(tmp_path, f"in-{k}.jsonl", [good_request(i) for i in ids])
+            remote.uploaded_paths[f"f-{k}"] = inputs
+            jobs.append((job_id, f"b-{k}", f"f-{k}", None, None, "submitted", None,
+                         SCHEMA_JSON, "store://test", "documents", "gpt-test", T0, T0))
+        spark.createDataFrame(docs, DOCUMENT_SCHEMA).write.parquet(str(tmp_path / "docs"))
+        spark.createDataFrame(jobs, BATCH_JOB_SCHEMA).write.parquet(str(tmp_path / "jobs"))
+        return (
+            spark.read.schema(BATCH_JOB_SCHEMA).parquet(str(tmp_path / "jobs")),
+            spark.read.schema(DOCUMENT_SCHEMA).parquet(str(tmp_path / "docs")),
+            remote,
+        )
+
+    @staticmethod
+    def _docs(df):
+        return {
+            r["_id"]: (r["ai_status"], [i["event_response"] for i in r["event_response"]])
+            for r in df.collect()
+        }
+
+    def test_one_join_and_sequential_outcome(self, spark, tmp_path):
+        ok = json.dumps({"sentiment": "positive"})
+        targets = {"job-1": [0, 1], "job-2": [2, 3], "job-3": [4]}
+        jobs, docs, remote = self._state(spark, tmp_path, 6, targets)
+        remote.statuses = {"b-1": "completed", "b-2": "completed", "b-3": "failed"}
+        remote.files = {
+            "b-1": (_write_jsonl(tmp_path, "out-1.jsonl", [result_line(0, content=ok)]),
+                    _write_jsonl(tmp_path, "err-1.jsonl", [result_line(1, error="boom")])),
+            "b-2": (_write_jsonl(tmp_path, "out-2.jsonl",
+                                 [result_line(2, content=ok), result_line(3, content="x")]),
+                    None),
+        }
+        # failed first, as the per-job chain ran them
+        order = ["job-3", "job-1", "job-2"]
+        for n in (1, 2):
+            some = jobs.filter(F.col("_id").isin(order[:n]))
+            assert _optimized_joins(run_poll_cycle(spark, some, docs, remote, T0)[1]) == 1
+        new_jobs, new_docs = run_poll_cycle(spark, jobs, docs, remote, T0)
+        assert _optimized_joins(new_docs) == 1
+
+        seq = docs
+        for job_id in order:
+            _, seq = run_poll_cycle(spark, jobs.filter(F.col("_id") == job_id), seq, remote, T0)
+        state = self._docs(new_docs)
+        assert state == self._docs(seq)
+        assert state == {
+            "doc-000": ("completed", [ok]),
+            "doc-001": ("failed", []),
+            "doc-002": ("completed", [ok]),
+            "doc-003": ("failed", []),
+            "doc-004": ("failed", []),
+            "doc-005": ("pending", []),
+        }
+        assert {r["_id"]: r["status"] for r in new_jobs.collect()} == {
+            "job-1": "completed", "job-2": "completed", "job-3": "failed"
+        }
+
+    def test_two_updates_for_one_document(self, spark, tmp_path):
+        """A failed and a completed job target doc-000, and one result
+        file has two lines each for doc-001 and doc-002."""
+        jobs, docs, remote = self._state(spark, tmp_path, 3, {"job-1": [0], "job-2": [0, 1, 2]})
+        a, b = json.dumps({"sentiment": "a"}), json.dumps({"sentiment": "b"})
+        out = _write_jsonl(tmp_path, "out.jsonl", [
+            result_line(0, content=a),
+            result_line(1, content=b), result_line(1, content=a),
+            result_line(2, content=a), result_line(2, content="not json"),
+        ])
+        remote.statuses = {"b-1": "failed", "b-2": "completed"}
+        remote.files = {"b-2": (out, None)}
+        _, new_docs = run_poll_cycle(spark, jobs, docs, remote, T0)
+        assert self._docs(new_docs) == {
+            "doc-000": ("failed", []),  # a failure beats an item
+            "doc-001": ("completed", [a]),  # the smallest item, once
+            "doc-002": ("failed", []),
+        }
+
+    def test_result_files_failure_keeps_job_active(self, spark, tmp_path, caplog, monkeypatch):
+        """result_files failing on every retry leaves that job active
+        with its docs in_progress; the other job in the tick completes."""
+        from types import SimpleNamespace
+
+        from batch_processing_system_spark.pipeline import run as run_module
+
+        # no backoff, patched in run's namespace only: a no-op time.sleep
+        # for the whole process would set py4j's polling threads spinning
+        monkeypatch.setattr(run_module, "time", SimpleNamespace(sleep=lambda s: None))
+        ok = json.dumps({"sentiment": "positive"})
+        jobs, docs, remote = self._state(spark, tmp_path, 3, {"job-1": [0], "job-2": [1]})
+        remote.statuses = {"b-1": "completed", "b-2": "completed"}
+        remote.files = {
+            "b-2": (_write_jsonl(tmp_path, "out.jsonl", [result_line(1, content=ok)]), None)
+        }
+        fetch = remote.result_files
+
+        def result_files(batch_id):
+            if batch_id == "b-1":
+                raise ConnectionError("result files unavailable")
+            return fetch(batch_id)
+
+        remote.result_files = result_files
+        with caplog.at_level("ERROR", logger="batch_processing_system_spark.pipeline"):
+            new_jobs, new_docs = run_poll_cycle(spark, jobs, docs, remote, T0)
+        rows = {r["_id"]: r for r in new_jobs.collect()}
+        assert rows["job-1"]["status"] == "processing"
+        assert rows["job-1"]["output_file_id"] is None
+        assert active_jobs(new_jobs).select("_id").collect() == [("job-1",)]
+        assert rows["job-2"]["status"] == "completed"
+        assert self._docs(new_docs) == {
+            "doc-000": ("in_progress", []),
+            "doc-001": ("completed", [ok]),
+            "doc-002": ("pending", []),
+        }
+        assert any('"event": "result_files_failed"' in r.message for r in caplog.records)
+
+
 class TestLatestState:
     def test_event_log_view_picks_latest(self, spark):
         from datetime import timedelta

@@ -28,6 +28,7 @@ import json
 import os
 import tempfile
 from datetime import datetime
+from types import SimpleNamespace
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -70,7 +71,9 @@ scenario = st.fixed_dictionaries(
 
 @pytest.fixture(autouse=True)
 def _no_backoff_sleep(monkeypatch):
-    monkeypatch.setattr(run_module.time, "sleep", lambda s: None)
+    # in run's namespace only: a no-op time.sleep for the whole process
+    # sets py4j's polling threads spinning on the GIL
+    monkeypatch.setattr(run_module, "time", SimpleNamespace(sleep=lambda s: None))
 
 
 def _fresh_docs(spark):

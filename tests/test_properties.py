@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from tests.conftest import prop_examples
 from pyspark.sql import functions as F
@@ -112,33 +112,39 @@ class TestAsOfJoin:
 
 
 class TestUpsertMerge:
+    # a custom_id may repeat: two jobs in one tick, or one result file
+    # with two lines for it
     updates_strategy = st.lists(
         st.tuples(st.integers(0, 9), st.sampled_from(["completed", "failed"])),
         min_size=0,
         max_size=8,
-        unique_by=lambda t: t[0],
     )
 
     @PROP_SETTINGS
     @given(updates=updates_strategy)
+    @example(updates=[(0, "completed"), (0, "completed"), (1, "completed"), (1, "failed")])
     def test_join_rebuild_matches_dict_semantics(self, spark, updates):
-        """S5 upsert == plain dict-merge semantics over in_progress docs:
-        updated docs take the new status (+1 array item when completed);
-        others unchanged. Applying the SAME updates a second time is a
-        no-op (the idempotency contract re-entry depends on)."""
+        """S5 upsert == plain dict-merge semantics over in_progress docs,
+        with at most one update applied per document: a failure beats
+        any item, otherwise the smallest item is appended once; others
+        unchanged, and the row count never changes. Applying the SAME
+        updates a second time is a no-op (the idempotency contract
+        re-entry depends on)."""
         from batch_processing_system_spark.pipeline.process import upsert_documents
         from batch_processing_system_spark.pipeline.schemas import DOCUMENT_SCHEMA
 
         docs = [(f"d{i}", "in_progress", [], "{}") for i in range(10)]
         docs_df = spark.createDataFrame(docs, DOCUMENT_SCHEMA)
         t0 = BASE
+        # the item text names the update's position, so the smallest
+        # of two items for one doc is checkable
         upd_rows = [
             (
                 f"d{i}",
                 status,
-                (f'{{"v": {i}}}', t0) if status == "completed" else None,
+                (f'{{"v": {n}}}', t0) if status == "completed" else None,
             )
-            for i, status in updates
+            for n, (i, status) in enumerate(updates)
         ]
         upd_df = spark.createDataFrame(
             upd_rows,
@@ -146,18 +152,29 @@ class TestUpsertMerge:
             "new_item struct<event_response:string, updated:timestamp>",
         )
         once = upsert_documents(docs_df, upd_df)
-        merged = {r["_id"]: r for r in once.collect()}
+        rows = once.collect()
+        assert len(rows) == len(docs)
+        merged = {r["_id"]: r for r in rows}
 
-        expected = {f"d{i}": ("in_progress", 0) for i in range(10)}
-        for i, status in updates:
-            expected[f"d{i}"] = (status, 1 if status == "completed" else 0)
-        actual = {k: (v["ai_status"], len(v["event_response"])) for k, v in merged.items()}
+        expected = {f"d{i}": ("in_progress", []) for i in range(10)}
+        for doc_id, status, item in upd_rows:
+            if status == "failed" or expected[doc_id][0] == "failed":
+                expected[doc_id] = ("failed", [])
+            elif expected[doc_id] == ("in_progress", []) or item[0] < expected[doc_id][1][0]:
+                expected[doc_id] = ("completed", [item[0]])
+        actual = {
+            k: (v["ai_status"], [e["event_response"] for e in v["event_response"]])
+            for k, v in merged.items()
+        }
         assert actual == expected
 
         # idempotence: re-applying to the already-transitioned snapshot
         # changes nothing — docs are no longer in_progress
         twice = {r["_id"]: r for r in upsert_documents(once, upd_df).collect()}
-        actual2 = {k: (v["ai_status"], len(v["event_response"])) for k, v in twice.items()}
+        actual2 = {
+            k: (v["ai_status"], [e["event_response"] for e in v["event_response"]])
+            for k, v in twice.items()
+        }
         assert actual2 == actual
 
 
