@@ -66,9 +66,9 @@ def _sf_tag(sf_dir: str) -> str:
 
 def inline_gc_enabled() -> bool:
     """ADVICE r11: inline stale-generation GC rmtree's sibling
-    directories under the shared warehouse from the READ path
-    (load_table -> bucketed_table / partitioned_events), so a
-    CONCURRENT process still scanning the old generation — a bench
+    directories under the shared warehouse from the READ path (a query
+    that builds bucketed_table / partitioned_events on first use), so
+    a CONCURRENT process still scanning the old generation — a bench
     running while pytest regenerates its tmp testdata, or a second
     live session registered against the old name — would hit
     file-not-found mid-query. Default ON (single-user bench repo:
@@ -76,8 +76,7 @@ def inline_gc_enabled() -> bool:
     forever); set SPARK_GRAFT_LAYOUT_GC=0 when several sessions share
     the warehouse and run ``python tools/layout_gc.py`` explicitly
     between workloads instead. Parsed through the shared env_flag
-    vocabulary (ADVICE r12: 'no'/'off' previously ENABLED this flag
-    while disabling the routing flags)."""
+    vocabulary."""
     from .io import env_flag
 
     return env_flag("SPARK_GRAFT_LAYOUT_GC", default=True)
@@ -115,7 +114,7 @@ def _src_fingerprint(sf_dir: str, table: str) -> str:
     in place (tools/make_sf.py writes to the same path) must never be
     served from a stale bucketed copy across sessions — the path-only
     tag could not see content changes. A changed source yields a new
-    table name, so the stale files are simply never routed to again."""
+    table name, so the stale files are simply never read again."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     parts: list[str] = []
     if os.path.isdir(path):  # partitioned/multi-file table root
@@ -219,8 +218,7 @@ def bucketed_table(
     ):
         _register_existing(spark, name, path, bucket_col, n_buckets, sort_cols)
         return name
-    # raw read: never recurse through io.load_table's bucketed routing
-    df = load_table(spark, sf_dir, table, raw=True)
+    df = load_table(spark, sf_dir, table)
     if sort_cols:
         # one write task per bucket => exactly one file per bucket
         # (repartition's pmod(murmur3(col), n) IS the native bucket-id

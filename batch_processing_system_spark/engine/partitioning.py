@@ -80,7 +80,7 @@ def partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     if os.path.isdir(path) and os.path.exists(os.path.join(path, "_SUCCESS")):
         _register_existing(spark, name, path)
         return name
-    df = load_table(spark, sf_dir, "events", raw=True).withColumn(
+    df = load_table(spark, sf_dir, "events").withColumn(
         PARTITION_COL, F.to_date(F.col("ts"))
     )
     # one write task per day => one file per partition directory (the
@@ -184,7 +184,7 @@ def hybrid_events(spark: SparkSession, sf_dir: str, n_buckets: int = 8) -> str:
     if os.path.isdir(path) and os.path.exists(os.path.join(path, "_SUCCESS")):
         _register_existing(spark, name, path, bucket_clause)
         return name
-    df = load_table(spark, sf_dir, "events", raw=True).withColumn(
+    df = load_table(spark, sf_dir, "events").withColumn(
         PARTITION_COL, F.to_date(F.col("ts"))
     )
     # pre-repartition on the bucket column: each write task owns one

@@ -167,8 +167,10 @@ def submit_batch(
         )
 
         # §3.1 step 6 — $set ai_status='in_progress' on each targeted doc
-        # (reference README.md:77), as a semi-join-driven rebuild.
-        targeted = result.valid_requests.select(F.col("custom_id").alias("t_id")).distinct()
+        # (reference README.md:77), as a semi-join-driven rebuild. An
+        # accepted submission has no errors, so every uploaded line
+        # passed every check and targets an existing doc.
+        targeted = result.upload.select(F.col("custom_id").alias("t_id")).distinct()
         sfield = status_field()
         s_in_progress, _, _ = status_values()
         marked = (

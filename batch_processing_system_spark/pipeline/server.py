@@ -80,42 +80,39 @@ class PipelineHandler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(data)
 
+    def _reject(self, *messages: str) -> None:
+        """The spec's 400 body for a request refused before validation."""
+        self._reply(
+            400,
+            {
+                "error": "Validation Failed",
+                "details": [
+                    {"type": "jsonl_format_error", "message": m} for m in messages
+                ],
+            },
+        )
+
     def do_POST(self) -> None:  # noqa: N802 - http.server API
         if self.path != "/process-batch":
             self._reply(404, {"error": "not found"})
             return
-        length = int(self.headers.get("Content-Length", 0))
+        # a negative length would read to EOF and a non-integer one
+        # would drop the connection, so both are refused up front
+        try:
+            length = int(self.headers.get("Content-Length", 0))
+        except ValueError:
+            length = -1
+        if length < 0:
+            self._reject("Content-Length must be a non-negative integer")
+            return
         ctype = self.headers.get("Content-Type", "")
         if "multipart/form-data" not in ctype:
-            self._reply(
-                400,
-                {
-                    "error": "Validation Failed",
-                    "details": [
-                        {
-                            "type": "jsonl_format_error",
-                            "message": "request must be multipart/form-data",
-                        }
-                    ],
-                },
-            )
+            self._reject("request must be multipart/form-data")
             return
         fields = _parse_multipart(ctype, self.rfile.read(length))
         missing = [f for f in REQUIRED_FIELDS if f not in fields]
         if missing:
-            self._reply(
-                400,
-                {
-                    "error": "Validation Failed",
-                    "details": [
-                        {
-                            "type": "jsonl_format_error",
-                            "message": f"missing required field: {m}",
-                        }
-                        for m in missing
-                    ],
-                },
-            )
+            self._reject(*(f"missing required field: {m}" for m in missing))
             return
 
         with tempfile.NamedTemporaryFile(

@@ -31,10 +31,9 @@ from .schemas import REQUEST_LINE_SCHEMA, VALIDATION_ERROR_SCHEMA
 
 @dataclass
 class ValidationResult:
-    valid_requests: DataFrame  # line_id + request fields, all checks passed
     errors: DataFrame  # VALIDATION_ERROR_SCHEMA records
     model: str | None  # the batch's single model (first line, W1 idiom)
-    upload: DataFrame  # the cached line scan every frame above reads
+    upload: DataFrame  # the cached line scan the errors are read from
 
 
 def validate_submission(
@@ -46,8 +45,9 @@ def validate_submission(
     """Run the spec's validation stage over an uploaded JSONL file.
 
     ``target_docs`` is the target collection scan (needs ``_id``).
-    Returns the surviving request lines plus every structured error.
-    The upload is cached for the several passes over it; the caller
+    Returns every structured error; a submission with none has every
+    line valid, so the upload itself is the valid request set. The
+    upload is cached for the several passes over it; the caller
     unpersists ``upload`` once nothing reads the result any more.
     """
     # U2 — schema well-formedness is a driver-side check; it gates the
@@ -115,10 +115,4 @@ def validate_submission(
         .unionByName(model_errors)
         .unionByName(id_errors)
     )
-
-    valid = (
-        well_formed.filter(F.col("body.model") == F.lit(model))
-        .join(target_docs.select(F.col("_id")), well_formed.custom_id == F.col("_id"), "left_semi")
-        .drop("raw")
-    )
-    return ValidationResult(valid_requests=valid, errors=errors, model=model, upload=lines)
+    return ValidationResult(errors=errors, model=model, upload=lines)

@@ -16,13 +16,11 @@ cross-batch arrivals lose to whatever the store already holds.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..engine.io import local_frame
+from ..pipeline.statestore import read_state
 
 INCOMING_DOC_SCHEMA = T.StructType(
     [
@@ -39,12 +37,6 @@ DIGEST_SCHEMA = T.StructType(
 )
 
 
-def _read_parquet_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
-    if os.path.exists(path):
-        return spark.read.schema(schema).parquet(path)
-    return local_frame(spark, [], schema)
-
-
 def dedup_batch(
     spark: SparkSession, batch: DataFrame, digest_path: str
 ) -> DataFrame:
@@ -55,7 +47,7 @@ def dedup_batch(
     hashed = batch.withColumn("text_hash", F.md5(F.encode("text", "UTF-8")))
     w_min = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("doc_id"))
     batch_unique = hashed.join(w_min, ["text_hash", "doc_id"])
-    seen = _read_parquet_or_empty(spark, digest_path, DIGEST_SCHEMA)
+    seen = read_state(spark, digest_path, DIGEST_SCHEMA)
     survivors = batch_unique.join(
         seen.select("text_hash"), "text_hash", "left_anti"
     ).select("doc_id", "text", "text_hash")

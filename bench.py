@@ -6,7 +6,7 @@ local[$SPARK_GRAFT_CPUS] and prints the headline JSON line:
 
 followed by a compact summary line (same value, no per-query map) so a
 tail-windowed capture still ends in parseable JSON; the full per-query
-payload is also persisted to .benchmarks/bench_sf{sf}[_routed].json.
+payload is also persisted to .benchmarks/bench_sf{sf}.json.
 
 ``value`` is the total wall-clock across all catalog queries (each
 executed to completion via a count-collect, so every shuffle/agg/join in
@@ -74,14 +74,7 @@ def main() -> None:
     # Warm the JVM/codegen path and touch every table's footer once so
     # per-query numbers measure the engine, not first-touch classloading
     # or filesystem cache misses.
-    from batch_processing_system_spark.engine.io import (
-        TABLES,
-        _bucketed_routing_on,
-        _hybrid_routing_on,
-        _partitioned_routing_on,
-        effective_routing,
-        load_table,
-    )
+    from batch_processing_system_spark.engine.io import TABLES, load_table
 
     for t in TABLES:
         # full-width read (count() alone prunes every column and would
@@ -133,9 +126,6 @@ def main() -> None:
         )
 
     total = round(sum(v for v in per_query.values() if v >= 0), 3)
-    routed = _bucketed_routing_on()
-    partitioned = _partitioned_routing_on()
-    hybrid = _hybrid_routing_on()
     # Config introspection goes through the JVM; if the driver died
     # mid-pass (observed once at sf3: RPC endpoint gone, every later
     # query ConnectionRefused), these calls raise and the artifact —
@@ -166,15 +156,6 @@ def main() -> None:
             "broadcast_threshold": _safe(
                 lambda: conf.get("spark.sql.autoBroadcastJoinThreshold")
             ),
-            # ADVICE r10: a routed run must be distinguishable from (and
-            # never clobber) the plain-path artifact — both layout flags
-            "bucketed_routing": routed,
-            "partitioned_routing": partitioned,
-            "hybrid_routing": hybrid,
-            # ADVICE r11: the EFFECTIVE per-table route (partitioned
-            # beats bucketed for events when both flags are set — the
-            # composed posture), so the artifact records what ran
-            "routing": effective_routing(),
             "repeat": n_repeat,
             "pass_totals": pass_totals,
         },
@@ -188,13 +169,7 @@ def main() -> None:
     #    window, so the recorded tail is parseable JSON.
     art_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".benchmarks")
     os.makedirs(art_dir, exist_ok=True)
-    art_name = (
-        f"bench_sf{sf}"
-        f"{'_routed' if routed else ''}"
-        f"{'_partitioned' if partitioned else ''}"
-        f"{'_hybrid' if hybrid else ''}"
-        f"{'_subset' if args.only else ''}.json"
-    )
+    art_name = f"bench_sf{sf}{'_subset' if args.only else ''}.json"
     with open(os.path.join(art_dir, art_name), "w") as f:
         json.dump(payload, f, indent=1)
     # VERDICT r13 item 9: the driver records only the LAST ~2000 chars
@@ -238,8 +213,7 @@ def main() -> None:
     print(json.dumps(tail_line))
     # Loud exit on any failed query: with the config introspection now
     # crash-safe, a dead-JVM pass would otherwise exit 0 and a retry
-    # harness (tools/run_sf3_campaign_part2.sh) would count it as a
-    # valid leg pass.
+    # harness would count it as a valid leg pass.
     if tail_line["failed"]:
         sys.exit(1)
 

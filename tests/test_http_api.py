@@ -6,6 +6,7 @@ round-1 verdict)."""
 from __future__ import annotations
 
 import json
+import socket
 import threading
 import urllib.error
 import urllib.request
@@ -147,3 +148,25 @@ class TestProcessBatchEndpoint:
 
         status, _ = post(f"{url}/other", {"jsonl_file": b"{}"})
         assert status == 404
+
+    def test_malformed_content_length_is_400(self, served):
+        # a negative length must not read the socket to EOF, and a
+        # non-integer one must not drop the connection unanswered
+        url, _, _ = served
+        port = int(url.rsplit(":", 1)[1])
+        body, ctype = multipart_body({"jsonl_file": b"{}"})
+        for length in ("-1", "abc"):
+            head = (
+                "POST /process-batch HTTP/1.1\r\nHost: 127.0.0.1\r\n"
+                f"Content-Type: {ctype}\r\nContent-Length: {length}\r\n\r\n"
+            ).encode()
+            with socket.create_connection(("127.0.0.1", port), timeout=5) as sock:
+                sock.sendall(head + body)
+                reply = b""
+                while chunk := sock.recv(65536):
+                    reply += chunk
+            status_line, _, rest = reply.partition(b"\r\n")
+            assert status_line.split()[1:2] == [b"400"], (length, reply[:200])
+            payload = json.loads(rest.split(b"\r\n\r\n", 1)[1])
+            assert payload["error"] == "Validation Failed"
+            assert payload["details"][0]["type"] == "jsonl_format_error"

@@ -51,44 +51,19 @@ def _check(spark, tmp, qname):
     assert out["ok"], out.get("note")
 
 
-def _check_routed(spark, tmp, qname, layout_root):
-    """The same Spark-vs-DuckDB comparison, but with the Spark side
-    served through the ROUTED scans (VERDICT r12 item 5): the hybrid
-    events twin (partitionBy(day)+bucketBy(user_id)) and the bucketed
-    dim/fact twins are built FROM the hypothesis-random micro-tables
-    into a per-example layout root, while DuckDB still reads the plain
-    parquet — so randomized shapes (ties, empty groups, boundary
-    timestamps) also cross the layout-twin write/register/read path
-    and any schema drift the twins introduce fails the comparison.
-    The warehouse roots are redirected so micro-twins never pollute
-    the repo's shared spark-warehouse."""
-    import os
-
-    from batch_processing_system_spark.engine import bucketing, partitioning
-
-    old_env = {
-        k: os.environ.get(k)
-        for k in ("SPARK_GRAFT_HYBRID", "SPARK_GRAFT_BUCKETED")
-    }
-    old_roots = (bucketing._BUCKET_ROOT, partitioning._PART_ROOT)
-    os.environ["SPARK_GRAFT_HYBRID"] = "1"
-    os.environ["SPARK_GRAFT_BUCKETED"] = "1"
-    bucketing._BUCKET_ROOT = str(layout_root / "bucketed")
-    partitioning._PART_ROOT = str(layout_root / "partitioned")
-    try:
-        _check(spark, tmp, qname)
-    finally:
-        for k, v in old_env.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
-        bucketing._BUCKET_ROOT, partitioning._PART_ROOT = old_roots
+def _assert_same_table(plain, twin):
+    assert [(f.name, f.dataType) for f in plain.schema.fields] == [
+        (f.name, f.dataType) for f in twin.schema.fields
+    ]
+    assert sorted(map(tuple, plain.collect())) == sorted(
+        map(tuple, twin.collect())
+    )
 
 
 def _gen_custdist(spark, tmp, data):
-    """Random customer/orders micro-shape (shared by the plain and the
-    routed sweeps): tiny key domains for constant tie/empty pressure."""
+    """Random customer/orders micro-shape (shared by the oracle and the
+    layout-twin sweeps): tiny key domains for constant tie/empty
+    pressure."""
     n_cust = data.draw(st.integers(1, 8))
     n_ord = data.draw(st.integers(0, 15))
     prios = ["1-URGENT", "5-LOW"]
@@ -116,7 +91,8 @@ def _gen_custdist(spark, tmp, data):
 
 def _gen_events_rolling(spark, tmp, data):
     """Random events micro-shape with repeated values (lerp-on-ties
-    pressure for the rolling median; shared plain/routed)."""
+    pressure for the rolling median; shared with the layout-twin
+    sweep)."""
     n_ev = data.draw(st.integers(1, 20))
     n_users = data.draw(st.integers(1, 3))
     vals = [1.25, 2.5, 2.5, 7.75]
@@ -249,28 +225,71 @@ class TestRandomOracle:
         _check(spark, tmp, "r46_equidepth_bins")
 
 
+def _twin_roots(layout_root):
+    """Point the bucketed and partitioned warehouse roots at a
+    per-example dir so micro-twins never pollute the repo's shared
+    spark-warehouse; returns the old roots for the caller to restore."""
+    from batch_processing_system_spark.engine import bucketing, partitioning
+
+    old_roots = (bucketing._BUCKET_ROOT, partitioning._PART_ROOT)
+    bucketing._BUCKET_ROOT = str(layout_root / "bucketed")
+    partitioning._PART_ROOT = str(layout_root / "partitioned")
+    return old_roots
+
+
+def _restore_roots(old_roots):
+    from batch_processing_system_spark.engine import bucketing, partitioning
+
+    bucketing._BUCKET_ROOT, partitioning._PART_ROOT = old_roots
+
+
 class TestRandomOracleRouted:
-    """VERDICT r12 item 5: a REDUCED randomized sweep re-run with the
-    full routing posture (SPARK_GRAFT_HYBRID=1 + SPARK_GRAFT_BUCKETED=1)
-    so hypothesis shapes also flow through the layout twins — the
-    bucketed customer/orders tables for the join-shaped query and the
-    hybrid (day-partitioned, user-bucketed) events twin for the
-    window-shaped one. Layout must NEVER change answers; any twin
-    write/register/read schema drift on an adversarial micro-shape
-    fails the DuckDB comparison here."""
+    """Layout must never change answers: a reduced randomized sweep
+    whose micro-tables also go through the layout twins the r72-r76
+    layout queries read — the bucketed, sorted customer/orders twins
+    for the join-shaped query and the hybrid (day-partitioned,
+    user-bucketed) events twin for the window-shaped one. Each example
+    passes the DuckDB oracle on the plain tables, and each twin built
+    from the same tables must have the plain table's schema and rows,
+    so adversarial shapes (ties, empty tables, boundary timestamps)
+    cross the twin write/register/read path."""
 
     @given(data=st.data())
     @settings(max_examples=prop_examples(4), deadline=None)
     def test_custdist_random_routed(self, spark, tmp_path_factory, data):
+        from batch_processing_system_spark.engine import bucketing
+        from batch_processing_system_spark.engine.io import load_table
+
         tmp = tmp_path_factory.mktemp("rnd_routed")
         _gen_custdist(spark, tmp, data)
-        _check_routed(spark, tmp, "r36_custdist", tmp_path_factory.mktemp("wh"))
+        _check(spark, tmp, "r36_custdist")
+        old_roots = _twin_roots(tmp_path_factory.mktemp("wh"))
+        try:
+            for table, key in (("customer", "c_custkey"), ("orders", "o_orderkey")):
+                name = bucketing.bucketed_table(
+                    spark, str(tmp), table, key, 32, sort_cols=(key,)
+                )
+                _assert_same_table(
+                    load_table(spark, str(tmp), table), spark.table(name)
+                )
+        finally:
+            _restore_roots(old_roots)
 
     @given(data=st.data())
     @settings(max_examples=prop_examples(4), deadline=None)
     def test_rolling_median_routed(self, spark, tmp_path_factory, data):
+        from batch_processing_system_spark.engine import partitioning
+        from batch_processing_system_spark.engine.io import load_table
+
         tmp = tmp_path_factory.mktemp("rnd_routed")
         _gen_events_rolling(spark, tmp, data)
-        _check_routed(
-            spark, tmp, "r44_rolling_median", tmp_path_factory.mktemp("wh")
-        )
+        _check(spark, tmp, "r44_rolling_median")
+        old_roots = _twin_roots(tmp_path_factory.mktemp("wh"))
+        try:
+            twin = spark.table(partitioning.hybrid_events(spark, str(tmp)))
+            _assert_same_table(
+                load_table(spark, str(tmp), "events"),
+                twin.drop(partitioning.PARTITION_COL),
+            )
+        finally:
+            _restore_roots(old_roots)

@@ -9,10 +9,8 @@
 3. `with_retry` resolves its sleeper at CALL time, so monkeypatching
    `run.time.sleep` actually suppresses the backoff (the failure-
    property sweep was silently sleeping 1s+2s per failing example).
-4. The session-timezone UTC pin runs BEFORE the bucketed-routing
-   branch of `load_table`, so the catalog-reuse path (which never
-   touches the raw parquet) gets the same timezone semantics as the
-   plain path.
+4. `load_table` pins the session timezone to UTC, so a non-UTC
+   driver session gets the oracle's timezone semantics.
 """
 
 from __future__ import annotations
@@ -130,12 +128,9 @@ class TestRetrySleeperResolution:
 
 
 class TestUtcPinOnRoutedPath:
-    def test_catalog_reuse_path_pins_utc(self, spark, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_BUCKETED", "1")
-        # first call may write/register the bucketed table
-        load_table(spark, SF_SMALL, "documents")
-        # simulate a non-UTC driver session hitting the catalog-reuse
-        # branch (table already registered: no raw read happens)
+    def test_catalog_reuse_path_pins_utc(self, spark):
+        # a non-UTC driver session must get the oracle's UTC semantics
+        # from the scan itself
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
         df = load_table(spark, SF_SMALL, "documents")
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"

@@ -4,16 +4,14 @@
   fingerprint-named bucketed table; the stale same-spec sibling must be
   pruned from spark-warehouse/bucketed instead of orphaned forever.
 - driver-memory guard: the factory heap scales with local[N].
-- date-partitioned events twin: identical answers through the
-  SPARK_GRAFT_PARTITIONED routing, static prune + DPP demonstrated.
+- date-partitioned events twin: the plain table's schema and rows,
+  static prune + DPP demonstrated.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-
-import pytest
 
 from batch_processing_system_spark.engine.bucketing import (
     _BUCKET_ROOT,
@@ -52,7 +50,7 @@ class TestDriverMemoryGuard:
 class TestBucketedGC:
     def test_stale_generation_is_pruned(self, spark, tmp_path):
         # private sf_dir so the fingerprint churn never touches the
-        # shared testdata generations other tests route through
+        # shared testdata generations other tests read
         sf_dir = str(tmp_path / "sf")
         os.makedirs(sf_dir)
         shutil.copy(
@@ -96,48 +94,27 @@ class TestBucketedGC:
 
 
 class TestPartitionedRouting:
-    """SPARK_GRAFT_PARTITIONED serves events from the date-partitioned
-    catalog twin — pure layout, so answers and schema are identical to
-    the plain-parquet path; r72/r73 demonstrate the pruning wins."""
-
-    _FLAG = "SPARK_GRAFT_PARTITIONED"
-
-    def _routed(self, fn, spark, sf_dir, on: bool):
-        old = os.environ.get(self._FLAG)
-        os.environ[self._FLAG] = "1" if on else "0"
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            if old is None:
-                del os.environ[self._FLAG]
-            else:
-                os.environ[self._FLAG] = old
+    """The date-partitioned events twin is pure layout: minus its
+    partition column it has the plain table's schema and rows; r72/r73
+    demonstrate the pruning wins."""
 
     def test_schema_and_rows_identical(self, spark):
         from batch_processing_system_spark.engine.io import load_table
-
-        plain = self._routed(
-            lambda s, d: load_table(s, d, "events"), spark, SF_SMALL, False
+        from batch_processing_system_spark.engine.partitioning import (
+            PARTITION_COL,
+            partitioned_events,
         )
-        routed = self._routed(
-            lambda s, d: load_table(s, d, "events"), spark, SF_SMALL, True
+
+        plain = load_table(spark, SF_SMALL, "events")
+        twin = spark.table(partitioned_events(spark, SF_SMALL)).drop(
+            PARTITION_COL
         )
         assert [(f.name, f.dataType) for f in plain.schema.fields] == [
-            (f.name, f.dataType) for f in routed.schema.fields
+            (f.name, f.dataType) for f in twin.schema.fields
         ]
         assert sorted(map(tuple, plain.collect())) == sorted(
-            map(tuple, routed.collect())
+            map(tuple, twin.collect())
         )
-
-    @pytest.mark.parametrize("qname", ["q39", "q96_retention", "r50_rolling_actives"])
-    def test_answers_identical_both_paths(self, spark, qname):
-        from batch_processing_system_spark.queries import REGISTRY, _ensure_loaded
-
-        _ensure_loaded()
-        fn = REGISTRY[qname].fn
-        a = sorted(map(tuple, self._routed(fn, spark, SF_SMALL, False).collect()))
-        b = sorted(map(tuple, self._routed(fn, spark, SF_SMALL, True).collect()))
-        assert a == b
 
     def test_r72_static_prune_reads_fewer_files(self, spark):
         from batch_processing_system_spark.engine.partitioning import (
@@ -176,28 +153,6 @@ class TestPartitionedRouting:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "2024-01-10" in plan
         assert "Exchange hashpartitioning" not in plan
-
-    def test_partitioned_flag_wins_for_events(self, spark):
-        # both layout flags set (round 12, the composed posture): events
-        # — the fact stream — must come from the PARTITIONED twin while
-        # the dims/join-facts stay bucketed; pinned in depth by
-        # tests/test_round12_fixes.py::TestComposedRouting
-        from batch_processing_system_spark.engine.io import load_table
-
-        old_b = os.environ.get("SPARK_GRAFT_BUCKETED")
-        old_p = os.environ.get(self._FLAG)
-        os.environ["SPARK_GRAFT_BUCKETED"] = "1"
-        os.environ[self._FLAG] = "1"
-        try:
-            df = load_table(spark, SF_SMALL, "events")
-            scan = df._jdf.queryExecution().executedPlan().toString()
-            assert "pby_events_" in scan
-        finally:
-            for k, v in (("SPARK_GRAFT_BUCKETED", old_b), (self._FLAG, old_p)):
-                if v is None:
-                    os.environ.pop(k, None)
-                else:
-                    os.environ[k] = v
 
     def test_reregistration_reuses_files_without_rewrite(self, spark):
         # fresh-session contract: dropping the catalog entry (files are

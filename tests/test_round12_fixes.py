@@ -1,9 +1,6 @@
 """Round-12 fixes pinned (VERDICT/ADVICE r11).
 
-- composed routing: SPARK_GRAFT_BUCKETED=1 + SPARK_GRAFT_PARTITIONED=1
-  in ONE session resolves events -> the date-partitioned twin and
-  customer/orders/lineitem/documents -> bucketed tables (the real
-  deployment posture: partitioned facts + bucketed dims).
+- hybrid events twin: the plain table's schema and rows.
 - detect_hot_keys: data-driven hot-key selection (the r75 profile
   shape) feeding salted_broadcast_left — planted skews at varying
   shares auto-detected, result hash-exact vs the plain join.
@@ -56,106 +53,27 @@ class TestDriverMemoryParsing:
         assert default_driver_memory("local[*]") == f"{max(8, n // 2)}g"
 
 
-class TestComposedRouting:
-    """VERDICT r11 item 1: the two layout flags compose — partitioned
-    wins for events (the fact stream), bucketing serves the rest."""
-
-    def _both(self, fn, on: bool):
-        old = {
-            k: os.environ.get(k)
-            for k in ("SPARK_GRAFT_BUCKETED", "SPARK_GRAFT_PARTITIONED")
-        }
-        for k in old:
-            os.environ[k] = "1" if on else "0"
-        try:
-            return fn()
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    del os.environ[k]
-                else:
-                    os.environ[k] = v
-
-    def test_load_table_resolves_composed_routes(self, spark):
-        from batch_processing_system_spark.engine.io import load_table
-
-        def routes():
-            ev = load_table(spark, SF_SMALL, "events").inputFiles()
-            cu = load_table(spark, SF_SMALL, "customer").inputFiles()
-            return ev, cu
-
-        ev, cu = self._both(routes, True)
-        assert all("/partitioned/pby_events_" in f for f in ev), ev[:2]
-        assert all("/bucketed/bkt_customer_" in f for f in cu), cu[:2]
-
-    def test_effective_routing_map(self):
-        from batch_processing_system_spark.engine.io import effective_routing
-
-        both = self._both(effective_routing, True)
-        assert both["events"] == "partitioned"
-        for t in ("customer", "orders", "lineitem", "documents"):
-            assert both[t] == "bucketed"
-        assert both["region"] == "plain"
-        plain = self._both(effective_routing, False)
-        assert set(plain.values()) == {"plain"}
-
-    def test_rows_identical_composed_vs_plain(self, spark):
-        from batch_processing_system_spark.engine.io import load_table
-
-        for table in ("events", "customer"):
-            plain = load_table(spark, SF_SMALL, table)
-            routed = self._both(
-                lambda t=table: load_table(spark, SF_SMALL, t), True
-            )
-            assert [(f.name, f.dataType) for f in plain.schema.fields] == [
-                (f.name, f.dataType) for f in routed.schema.fields
-            ]
-            assert sorted(map(tuple, plain.collect())) == sorted(
-                map(tuple, routed.collect())
-            ), f"{table} rows differ on the composed route"
-
-
 class TestHybridRouting:
-    """SPARK_GRAFT_HYBRID serves events from the r74 hybrid twin
-    (partitionBy(day) + bucketBy(user_id)) — both layout levers on
-    general scans; pure layout, so schema and rows are identical."""
+    """The r74 hybrid events twin (partitionBy(day) + bucketBy(user_id))
+    is pure layout: minus its partition column it has the plain table's
+    schema and rows."""
 
-    def test_hybrid_wins_and_rows_identical(self, spark, monkeypatch):
-        from batch_processing_system_spark.engine.io import (
-            effective_routing,
-            load_table,
+    def test_hybrid_wins_and_rows_identical(self, spark):
+        from batch_processing_system_spark.engine.io import load_table
+        from batch_processing_system_spark.engine.partitioning import (
+            PARTITION_COL,
+            hybrid_events,
         )
 
         plain = load_table(spark, SF_SMALL, "events")
-        monkeypatch.setenv("SPARK_GRAFT_HYBRID", "1")
-        # hybrid must win over the other events routes
-        monkeypatch.setenv("SPARK_GRAFT_PARTITIONED", "1")
-        monkeypatch.setenv("SPARK_GRAFT_BUCKETED", "1")
-        assert effective_routing()["events"] == "hybrid"
-        routed = load_table(spark, SF_SMALL, "events")
-        assert all("/partitioned/hyb_events_" in f for f in routed.inputFiles())
+        twin = spark.table(hybrid_events(spark, SF_SMALL)).drop(PARTITION_COL)
+        assert all("/partitioned/hyb_events_" in f for f in twin.inputFiles())
         assert [(f.name, f.dataType) for f in plain.schema.fields] == [
-            (f.name, f.dataType) for f in routed.schema.fields
+            (f.name, f.dataType) for f in twin.schema.fields
         ]
         assert sorted(map(tuple, plain.collect())) == sorted(
-            map(tuple, routed.collect())
+            map(tuple, twin.collect())
         )
-
-    def test_hybrid_scan_serves_user_rollup_without_exchange(self, spark, monkeypatch):
-        # the point of the hybrid route: a per-user aggregation over the
-        # ROUTED general scan consumes the bucket distribution — no hash
-        # Exchange (only whatever the final plan needs for ordering)
-        from batch_processing_system_spark.engine.io import load_table
-        from pyspark.sql import functions as F2
-
-        monkeypatch.setenv("SPARK_GRAFT_HYBRID", "1")
-        df = (
-            load_table(spark, SF_SMALL, "events")
-            .groupBy("user_id")
-            .agg(F2.count("event_id").alias("n"))
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan[:500]
 
 
 class TestDetectHotKeys:

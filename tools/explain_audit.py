@@ -310,75 +310,6 @@ def main() -> None:
         "silhouette (statistics not reaching the reorderer?)",
     )
 
-    # ---- Bucketed routing: load-bearing, asserted (not a demo) ------
-    # With SPARK_GRAFT_BUCKETED on, events/documents scans come from
-    # bucketed catalog tables (engine/io.py BUCKET_SPECS). Assert the
-    # structural wins on the two headline consumers and record the
-    # before/after Exchange counts (broadcast disabled so the deltas
-    # are structural, not threshold luck).
-    from batch_processing_system_spark.queries.curation import (
-        q75_curation_pipeline,
-    )
-    from batch_processing_system_spark.queries.relational import q07
-    from batch_processing_system_spark.queries.temporal import q96_retention
-    from batch_processing_system_spark.queries.tpch import (
-        r34_priority_waiting,
-        r36_custdist,
-        r39_large_orders,
-        r65_ship_latency,
-    )
-
-    def _executed(df) -> str:
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    old_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_flag = os.environ.get("SPARK_GRAFT_BUCKETED")
-    routing: dict[str, dict[str, int]] = {}
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        for qname, fn in (("q96_retention", q96_retention),
-                          ("q75_curation_pipeline", q75_curation_pipeline),
-                          # r10: the orderkey-bucketed TPC-H family —
-                          # orders⋈lineitem must lose its fact⋈fact
-                          # Exchanges on the routed path
-                          ("r34_priority_waiting", r34_priority_waiting),
-                          ("r39_large_orders", r39_large_orders),
-                          ("r65_ship_latency", r65_ship_latency),
-                          # r11: the custkey-bucketed customer family
-                          ("q07", q07),
-                          ("r36_custdist", r36_custdist)):
-            routing[qname] = {}
-            for label, flag in (("plain", "0"), ("routed", "1")):
-                os.environ["SPARK_GRAFT_BUCKETED"] = flag
-                routing[qname][label] = _executed(fn(spark, SF_DIR)).count(
-                    "Exchange"
-                )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
-        if old_flag is None:
-            os.environ.pop("SPARK_GRAFT_BUCKETED", None)
-        else:
-            os.environ["SPARK_GRAFT_BUCKETED"] = old_flag
-    check(
-        routing["q96_retention"]["routed"] < routing["q96_retention"]["plain"],
-        f"bucketed routing removed no q96 Exchange ({routing['q96_retention']})",
-    )
-    check(
-        routing["q75_curation_pipeline"]["routed"]
-        <= routing["q75_curation_pipeline"]["plain"],
-        f"bucketed routing ADDED q75 Exchanges ({routing['q75_curation_pipeline']})",
-    )
-    for q in ("r34_priority_waiting", "r39_large_orders", "r65_ship_latency"):
-        check(
-            routing[q]["routed"] < routing[q]["plain"],
-            f"orderkey bucketed routing removed no {q} Exchange ({routing[q]})",
-        )
-    for q in ("q07", "r36_custdist"):
-        check(
-            routing[q]["routed"] < routing[q]["plain"],
-            f"custkey bucketed routing removed no {q} Exchange ({routing[q]})",
-        )
-
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(out, "w") as f:
         f.write("# Physical plans (explain formatted), audited by tools/explain_audit.py\n")
@@ -399,48 +330,12 @@ def main() -> None:
             "The audit FAILS if these trees are identical.\n"
         )
         f.write(
-            "\n## §Bucketed routing — load-bearing co-location "
-            "(asserted each audit run)\n\nWith SPARK_GRAFT_BUCKETED "
-            "set, events/documents/orders/lineitem/customer scans are "
-            "served from bucketed catalog tables (engine/io.py "
-            "BUCKET_SPECS: events by user_id, documents by doc_id, "
-            "orders by o_orderkey, lineitem by l_orderkey, customer "
-            "by c_custkey — 32 buckets, sorted within buckets). "
-            "Exchange counts on the pre-execution physical plan, "
-            "autoBroadcastJoinThreshold=-1:\n\n"
-            "| query | plain | routed |\n|---|---|---|\n"
-            + "".join(
-                f"| {q} | {routing[q]['plain']} | {routing[q]['routed']} |\n"
-                for q in routing
-            )
-            + "\n"
-            "q96 loses the user_id Exchanges feeding the cohort "
-            "aggregation, the cohort join, and the distinct. q75's "
-            "total is unchanged but the WIDE shuffle (the full "
-            "text-derived corpus projection into the dedup anti-join) "
-            "is replaced by a narrow doc_id-only re-partition — the "
-            "100 TB cost driver is gone. r34/r39/r65 (the orderkey "
-            "TPC-H family, r10) drop the orders⋈lineitem fact⋈fact "
-            "Exchanges — and, because both sides are sortBy(orderkey) "
-            "at write, the SortMergeJoin's per-side Sorts too; "
-            "tests/test_bucketed_routing.py pins that structurally "
-            "plus hash-identical answers on both paths. q07/r36 (the "
-            "custkey customer family, r11) drop the customer-side "
-            "Exchange of the customer⋈orders join — the orders side "
-            "still shuffles on o_custkey, which its o_orderkey "
-            "bucketing cannot serve. The audit FAILS if routing stops "
-            "removing q96/r34/r39/r65/q07/r36 Exchanges or starts "
-            "adding q75 Exchanges.\n"
-        )
-        f.write(
             "\n## §Partitioned — date-partitioned events twin "
             "(asserted each audit run)\n\nevents written once "
             "partitioned by event_date = to_date(ts) "
-            "(engine/partitioning.py), one directory per day; "
-            "SPARK_GRAFT_PARTITIONED routes general events scans "
-            "through the twin with identical schema/rows "
-            "(tests/test_round11_fixes.py pins hash-identical "
-            "answers).\n\n"
+            "(engine/partitioning.py), one directory per day, with "
+            "the plain table's schema and rows "
+            "(tests/test_round11_fixes.py pins them).\n\n"
             f"- **r72 static prune**: the literal 3-day window reads "
             f"**{part_read} of {part_total}** partition files — the "
             "scan's PartitionFilters carry the event_date bounds "

@@ -36,32 +36,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--fast", action="store_true",
                     help="oracle at sf0.001 and skip bench")
-    ap.add_argument("--routed", action="store_true",
-                    help="run the oracle leg with SPARK_GRAFT_BUCKETED=1: "
-                    "the FULL catalog must stay hash-identical on the "
-                    "bucketed-routing path (r10 routing contract, "
-                    "measured 168/168 at sf0.01)")
-    ap.add_argument("--partitioned", action="store_true",
-                    help="run the oracle leg with SPARK_GRAFT_PARTITIONED=1: "
-                    "the FULL catalog must stay hash-identical on the "
-                    "date-partitioned events route (r11 layout contract, "
-                    "measured 172/172 at sf0.001). Combine with --routed "
-                    "for the composed deployment posture (r12): "
-                    "partitioned facts (events) + bucketed dims/facts "
-                    "(customer/orders/lineitem/documents)")
-    ap.add_argument("--hybrid", action="store_true",
-                    help="run the oracle leg with SPARK_GRAFT_HYBRID=1: "
-                    "events served from the r74 hybrid twin "
-                    "(partitionBy(day) + bucketBy(user_id)) — the full "
-                    "hypertable posture; combine with --routed for "
-                    "hybrid facts + bucketed dims (r12)")
     args = ap.parse_args()
-    if args.routed:
-        os.environ["SPARK_GRAFT_BUCKETED"] = "1"
-    if args.partitioned:
-        os.environ["SPARK_GRAFT_PARTITIONED"] = "1"
-    if args.hybrid:
-        os.environ["SPARK_GRAFT_HYBRID"] = "1"
     sf = "/root/testdata/sf0.001" if args.fast else "/root/testdata/sf0.01"
     summary: dict = {}
     ok = True
