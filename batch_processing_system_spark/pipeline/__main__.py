@@ -126,7 +126,7 @@ def cmd_poll(args: argparse.Namespace) -> int:
     # has a fixed handful of statuses (schemas.py), independent of size
     statuses = {
         r["status"]: r["n"]
-        for r in new_jobs.sparkSession.read.parquet(args.jobs)
+        for r in _read_state(spark, args.jobs, BATCH_JOB_SCHEMA)
         .groupBy("status")
         .count()
         .withColumnRenamed("count", "n")

@@ -19,8 +19,18 @@ Delta Lake / Iceberg use), built from two filesystem primitives only:
     publishes the fully-written manifest or fails with EEXIST
     (optimistic concurrency: a racing committer must rebase).
 
+Each stage is one flat directory of parquet files, repartitioned and
+sorted on the ``_bucket`` column: a bucket lives in exactly one file
+and forms a contiguous run of rows there, so the parquet min/max
+statistics of ``_bucket`` let a bucket filter skip the files, row
+groups and pages that do not hold it. The manifest maps EVERY bucket
+id to the stage that holds its live rows and records the stage schema
+as JSON, so — like a Delta log — a reader neither lists partition
+directories nor infers a schema: it reads each live stage once, with
+the manifest's schema, filtered to the buckets the manifest assigns it.
+
 Readers resolve the highest-numbered manifest and read exactly the
-bucket→directory mapping it lists. A crash at ANY point before the
+bucket→stage mapping it lists. A crash at ANY point before the
 link leaves the previous manifest current (readers see the old
 snapshot, orphan staging dirs are garbage); a crash after the link is
 a completed commit (readers see the new snapshot). There is no state
@@ -39,9 +49,11 @@ import os
 import re
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .process import upsert_documents
 
@@ -73,7 +85,16 @@ def current_version(root: str) -> int:
 
 def _read_manifest(root: str, version: int) -> dict:
     with open(_manifest_path(root, version)) as f:
-        return json.load(f)
+        manifest = json.load(f)
+    if "schema" not in manifest:
+        # an old stage-*/_bucket=N manifest: its files lack the _bucket
+        # column, so a bucket filter would read it as an empty store
+        raise ValueError(
+            f"manifest version {version} in {root} has the old "
+            "stage-*/_bucket=N layout (no 'schema' key); the store now "
+            "keeps flat bucket-sorted stages, so re-create it with init_store"
+        )
+    return manifest
 
 
 def _commit(root: str, manifest: dict) -> None:
@@ -104,24 +125,20 @@ def bucket_of(col, n_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
-def _write_stage(df: DataFrame, root: str, n_buckets: int) -> tuple[str, list[int]]:
-    """Write ``df`` hash-bucketed into a fresh immutable staging dir;
-    returns (stage dir name, bucket ids present)."""
+def _write_stage(df: DataFrame, root: str, n_buckets: int) -> tuple[str, dict]:
+    """Write ``df`` into a fresh immutable staging dir as flat parquet,
+    hash-bucketed and sorted on ``_bucket`` so each bucket is one
+    contiguous run in one file; returns (stage dir name, stage schema
+    as a JSON object)."""
     stage = f"stage-{uuid.uuid4().hex}"
-    out = os.path.join(root, stage)
+    tagged = df.withColumn(BUCKET_COL, bucket_of(F.col("_id"), n_buckets))
     (
-        df.withColumn(BUCKET_COL, bucket_of(F.col("_id"), n_buckets))
-        .repartition(BUCKET_COL)
+        tagged.repartition(BUCKET_COL)
+        .sortWithinPartitions(BUCKET_COL)
         .write.mode("error")
-        .partitionBy(BUCKET_COL)
-        .parquet(out)
+        .parquet(os.path.join(root, stage))
     )
-    present = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(out)
-        if d.startswith(f"{BUCKET_COL}=")
-    ]
-    return stage, present
+    return stage, tagged.schema.jsonValue()
 
 
 def init_store(docs: DataFrame, root: str, n_buckets: int = 64) -> int:
@@ -129,26 +146,48 @@ def init_store(docs: DataFrame, root: str, n_buckets: int = 64) -> int:
     os.makedirs(root, exist_ok=True)
     if current_version(root):
         raise ValueError(f"store at {root} already initialized")
-    stage, present = _write_stage(docs, root, n_buckets)
+    stage, schema = _write_stage(docs, root, n_buckets)
     manifest = {
         "version": 1,
         "n_buckets": n_buckets,
-        "buckets": {str(b): f"{stage}/{BUCKET_COL}={b}" for b in present},
+        "schema": schema,
+        "buckets": {str(b): stage for b in range(n_buckets)},
     }
     _commit(root, manifest)
     return 1
 
 
+def _read_buckets(
+    spark: SparkSession, root: str, manifest: dict, buckets
+) -> DataFrame:
+    """The live rows of ``buckets``: one schema-given scan per stage
+    holding any of them, filtered to the buckets the manifest assigns
+    that stage, unioned, without the ``_bucket`` column."""
+    schema = T.StructType.fromJson(manifest["schema"])
+    by_stage: dict[str, list[int]] = {}
+    for b in buckets:
+        by_stage.setdefault(manifest["buckets"][str(b)], []).append(b)
+    parts = [
+        spark.read.schema(schema)
+        .parquet(os.path.join(root, stage))
+        .where(F.col(BUCKET_COL).isin(live))
+        for stage, live in sorted(by_stage.items())
+    ]
+    return reduce(DataFrame.union, parts).drop(BUCKET_COL)
+
+
 def read_store(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
-    """Snapshot read of the given (default: current) manifest version.
-    Only directories the manifest lists are touched — a concurrent
-    writer's staging files are invisible by construction."""
+    """Snapshot read of the given (default: current) manifest version:
+    each live stage is read with the manifest's schema (no directory
+    listing job, no schema inference) and filtered to its live buckets,
+    which the stage's sorted ``_bucket`` statistics prune. Only stages
+    the manifest lists are touched — a concurrent writer's staging
+    files are invisible by construction."""
     v = version or current_version(root)
     if not v:
         raise ValueError(f"no committed manifest in {root}")
     manifest = _read_manifest(root, v)
-    dirs = [os.path.join(root, rel) for rel in manifest["buckets"].values()]
-    return spark.read.parquet(*dirs)
+    return _read_buckets(spark, root, manifest, range(manifest["n_buckets"]))
 
 
 def upsert_store(
@@ -159,7 +198,7 @@ def upsert_store(
 ) -> list[int]:
     """Transactional partition-scoped MERGE: stage merged versions of
     only the touched buckets, then commit a manifest that maps touched
-    buckets to the new files and carries every other bucket forward
+    buckets to the new stage and carries every other bucket forward
     untouched. Returns the touched bucket ids.
 
     ``_crash_point`` ('after_stage' | 'mid_commit') aborts the writer
@@ -180,27 +219,23 @@ def upsert_store(
     touched = sorted(
         r[BUCKET_COL] for r in tagged.select(BUCKET_COL).distinct().collect()
     )
-    # updates may target buckets with no current data; only buckets
-    # that exist can be merged, the rest have nothing to update into
-    touched = [b for b in touched if str(b) in manifest["buckets"]]
     if not touched:
         return []
 
-    docs = spark.read.parquet(
-        *(os.path.join(root, manifest["buckets"][str(b)]) for b in touched)
-    )
+    docs = _read_buckets(spark, root, manifest, touched)
     merged = upsert_documents(docs, tagged.drop(BUCKET_COL))
-    stage, present = _write_stage(merged, root, n_buckets)
+    stage, _ = _write_stage(merged, root, n_buckets)
 
     if _crash_point == "after_stage":
         raise RuntimeError("injected crash: staged but not committed")
 
     new_buckets = dict(manifest["buckets"])
-    for b in present:
-        new_buckets[str(b)] = f"{stage}/{BUCKET_COL}={b}"
+    for b in touched:
+        new_buckets[str(b)] = stage
     new_manifest = {
         "version": base_version + 1,
         "n_buckets": n_buckets,
+        "schema": manifest["schema"],
         "buckets": new_buckets,
     }
     if _crash_point == "mid_commit":
@@ -223,7 +258,7 @@ def vacuum(root: str) -> list[str]:
     v = current_version(root)
     if not v:
         return []
-    live = {rel.split("/", 1)[0] for rel in _read_manifest(root, v)["buckets"].values()}
+    live = set(_read_manifest(root, v)["buckets"].values())
     removed = []
     for name in os.listdir(root):
         path = os.path.join(root, name)
@@ -261,14 +296,15 @@ def compact(
         raise ValueError(f"no committed manifest in {root}")
     manifest = _read_manifest(root, base_version)
     target_buckets = n_buckets or manifest["n_buckets"]
-    snapshot = read_store(spark, root, base_version).drop(BUCKET_COL)
-    stage, present = _write_stage(snapshot, root, target_buckets)
+    snapshot = read_store(spark, root, base_version)
+    stage, schema = _write_stage(snapshot, root, target_buckets)
     if _crash_point == "after_stage":
         raise RuntimeError("injected crash: compaction staged, not committed")
     new_manifest = {
         "version": base_version + 1,
         "n_buckets": target_buckets,
-        "buckets": {str(b): f"{stage}/{BUCKET_COL}={b}" for b in present},
+        "schema": schema,
+        "buckets": {str(b): stage for b in range(target_buckets)},
     }
     _commit(root, new_manifest)
     return base_version + 1

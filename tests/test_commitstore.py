@@ -238,3 +238,88 @@ class TestCompact:
         v = compact(spark, root)
         assert current_version(root) == v
         assert _snapshot(spark, root) == state
+
+
+def _reader_stages(spark, op):
+    """Run ``op()`` and return the stages it started while building a
+    scan: a file-listing job or a schema-inference job. Both are Spark
+    jobs whose call site is a ``DataFrameReader`` method, not an action."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    store, bus = jsc.statusStore(), jsc.listenerBus()
+    no_quantiles = sc._gateway.new_array(sc._gateway.jvm.double, 0)
+
+    def newest_first():
+        bus.waitUntilEmpty()
+        stages = store.stageList(None, False, False, no_quantiles, None)
+        return [stages.apply(i) for i in range(stages.size())]
+
+    seen = newest_first()
+    last = seen[0].stageId() if seen else -1
+    op()
+    found = []
+    for s in newest_first():
+        if s.stageId() <= last:
+            break
+        desc = s.description()
+        desc = desc.get() if desc.isDefined() else ""
+        call_site = s.details().split("\n")[0]
+        if desc.startswith("Listing leaf files") or "DataFrameReader" in call_site:
+            found.append((s.name(), desc[:80]))
+    return found
+
+
+class TestFlatStageLayout:
+    """Stages are flat bucket-sorted parquet with the schema in the
+    manifest: store operations plan their scans without a file-listing
+    or schema-inference job."""
+
+    def test_store_ops_start_no_listing_or_inference_job(self, spark, tmp_path):
+        from batch_processing_system_spark.pipeline.commitstore import compact
+
+        root = str(tmp_path / "store")
+        init_store(_docs(spark, n=400), root, n_buckets=64)
+        assert _reader_stages(spark, lambda: read_store(spark, root).count()) == []
+        updates = _updates(spark, range(0, 400, 3))
+        touched = []
+
+        def upsert():
+            touched.extend(upsert_store(spark, root, updates))
+
+        assert _reader_stages(spark, upsert) == []
+        assert len(touched) > 32  # past Spark's parallel-listing threshold
+        assert _reader_stages(spark, lambda: compact(spark, root)) == []
+        assert read_store(spark, root).count() == 400
+        for stage in (d for d in os.listdir(root) if d.startswith("stage-")):
+            files = os.listdir(os.path.join(root, stage))
+            subdirs = [e for e in files if e.startswith("_bucket=")]
+            assert subdirs == [], f"{stage} has partition directories {subdirs}"
+
+    def test_old_layout_manifest_is_refused(self, spark, tmp_path):
+        """A manifest from the stage-*/_bucket=N layout has no schema
+        key; its files lack the _bucket column, so reading it through
+        a bucket filter would show an empty store. It must raise."""
+        import json
+
+        from pyspark.sql import functions as F
+
+        from batch_processing_system_spark.pipeline.commitstore import bucket_of
+
+        root = str(tmp_path / "store")
+        stage = "stage-old"
+        tagged = _docs(spark, n=20).withColumn("_bucket", bucket_of(F.col("_id"), 4))
+        tagged.write.partitionBy("_bucket").parquet(os.path.join(root, stage))
+        buckets = sorted(
+            d.split("=", 1)[1]
+            for d in os.listdir(os.path.join(root, stage))
+            if d.startswith("_bucket=")
+        )
+        old = {"version": 1, "n_buckets": 4,
+               "buckets": {b: f"{stage}/_bucket={b}" for b in buckets}}
+        with open(os.path.join(root, "manifest-000000000001.json"), "w") as f:
+            json.dump(old, f)
+        assert current_version(root) == 1
+        with pytest.raises(ValueError, match="_bucket=N layout"):
+            read_store(spark, root)
+        with pytest.raises(ValueError, match="_bucket=N layout"):
+            upsert_store(spark, root, _updates(spark, [3]))
