@@ -41,12 +41,6 @@ def bcount(alias: str = "cnt") -> Column:
     return F.count(F.lit(1)).alias(alias)
 
 
-def r4(col: Column, alias: str, digits: int = 4) -> Column:
-    """Round a float-producing scalar (sqrt/log/pow/cosine...) to kill
-    last-ulp libm differences between engines (D7)."""
-    return F.round(col.cast("double"), digits).alias(alias)
-
-
 def epoch_s(col: str | Column = "ts") -> Column:
     """Floor-to-second epoch, matching DuckDB ``CAST(floor(epoch(ts)) AS
     BIGINT)`` (D6: never hash raw ns-precision timestamps)."""

@@ -27,9 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def env_flag(name: str, default: bool = False) -> bool:
     """One truthy/falsy vocabulary for every SPARK_GRAFT_* boolean flag.
     Unset → ``default``; set → true iff the value is one of

@@ -36,7 +36,7 @@ import functools
 from typing import Iterable, Sequence
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
@@ -186,10 +186,6 @@ def make_tokenize_udf(merges: Sequence[tuple[str, str]]):
         return texts.map(one)
 
     return _tok
-
-
-def tokenize_column(df: DataFrame, merges: Sequence[tuple[str, str]], text_col: str = "text") -> Column:
-    return make_tokenize_udf(merges)(F.col(text_col))
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,9 @@
-"""Text-analysis functions (north-star X4): language identification,
-quality metrics, token counting — the per-document functions a
-training-data pipeline runs before dedup/filtering.
+"""Text-analysis functions (north-star X4): language identification —
+a per-document function a training-data pipeline runs before
+dedup/filtering.
 
 The SQL-expressible versions power catalog queries (q47/q48/q50); the
-pandas UDFs here are the natural-language-strength versions for real
+pandas UDF here is the natural-language-strength version for real
 corpora, Arrow-batched so Python touches each batch once.
 """
 
@@ -49,43 +49,3 @@ def detect_language(text: str | None) -> str:
 @pandas_udf(T.StringType())
 def langid_udf(texts: pd.Series) -> pd.Series:
     return texts.map(detect_language, na_action=None)
-
-
-_QUALITY_TYPE = T.StructType(
-    [
-        T.StructField("n_tokens", T.LongType()),
-        T.StructField("n_chars", T.LongType()),
-        T.StructField("alpha_ratio", T.DoubleType()),
-        T.StructField("stopword_ratio", T.DoubleType()),
-        T.StructField("max_repeat_run", T.LongType()),
-    ]
-)
-
-
-def _quality_one(text: str | None) -> tuple:
-    if not text:
-        return (0, 0, 0.0, 0.0, 0)
-    tokens = text.split()
-    n = len(tokens)
-    alpha = sum(c.isalpha() for c in text)
-    stop = sum(1 for t in tokens if t.lower() in _MARKERS["en"])
-    # longest run of the same token — boilerplate/garbage signal
-    run = best = 0
-    prev = None
-    for t in tokens:
-        run = run + 1 if t == prev else 1
-        best = max(best, run)
-        prev = t
-    return (
-        n,
-        len(text),
-        round(alpha / max(len(text), 1), 4),
-        round(stop / max(n, 1), 4),
-        best,
-    )
-
-
-@pandas_udf(_QUALITY_TYPE)
-def quality_udf(texts: pd.Series) -> pd.DataFrame:
-    rows = [_quality_one(t) for t in texts]
-    return pd.DataFrame(rows, columns=[f.name for f in _QUALITY_TYPE.fields])

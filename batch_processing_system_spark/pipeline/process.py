@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.json_schema import conformance_predicate, make_validator_udf
+from ..functions.json_schema import conformance_predicate
 from ..sources.jsonl import read_jsonl
 from .schemas import (
     EVENT_RESPONSE_ITEM,
@@ -47,18 +47,14 @@ def load_outcomes(
     return out
 
 
-def build_update_records(
-    outcomes: DataFrame, output_schema_json: str, now, strict: bool = False
-) -> DataFrame:
+def build_update_records(outcomes: DataFrame, output_schema_json: str, now) -> DataFrame:
     """Steps 4a-4d of the spec's result loop: branch, extract, validate.
 
     Returns per-custom_id update records:
         custom_id, new_status ('completed'|'failed'), new_item (nullable
         struct to append to event_response)
 
-    Validation: fast path is the compiled from_json predicate (F6);
-    ``strict=True`` adds the Arrow-vectorized full validator (U1) for
-    schemas with non-structural constraints.
+    Validation: the compiled from_json predicate (F6).
     """
     content = F.col("response.body.choices").getItem(0).getField("message").getField("content")
     has_error = F.col("error").isNotNull()  # F4 branch (:96)
@@ -67,10 +63,6 @@ def build_update_records(
     valid = (~has_error) & F.col("content").isNotNull() & conformance_predicate(
         F.col("content"), output_schema_json
     )
-    if strict:
-        verdict = make_validator_udf(output_schema_json)
-        df = df.withColumn("verdict", verdict(F.col("content")))
-        valid = valid & F.col("verdict.valid")
 
     # Valid → completed + $push {event_response, updated} (:100);
     # invalid or error line → failed, array untouched (:101-102).

@@ -225,25 +225,21 @@ def _semantic_dedup_oracle() -> str:
     doc="X2/X2b composed — SemDeDup-shape semantic deduplication (Abbas "
     "et al. 2023, 'SemDeDup: Data-efficient learning at web-scale "
     "through semantic deduplication'): embedding-cosine near-dup pairs "
-    "(exact, cos >= 0.45 — q54's capped-broadcast/LSH generator) form "
+    "(exact, cos >= 0.45 — q54's capped-broadcast/blocked generator) form "
     "a pair graph; connected components assign every vector a cluster; "
     "one representative per cluster (min vec_id) is kept and the rest "
     "are dropped. Output: every vector with its component label and "
     "kept flag — the drop list IS the rows with kept = false. Scale "
-    "posture: the pair generator never goes O(n²) past the broadcast "
-    "budget (LSH bucketing takes over), components iterate on the "
+    "posture: past the broadcast budget the pair generator runs as a "
+    "distributed blocked grid (no driver state), components iterate on the "
     "pair graph only (a vanishing fraction of the corpus), and the "
     "final labeling is one left join of corpus ids against the "
     "component map. Oracle: recursive-CTE transitive closure over the "
     "same exact pair SQL. Tier-1: pair membership margins measured at "
     "q54 (>=5.5e-4 from threshold), component labels are integer "
     "min-reachability — no float in the hashed output. The pair set is "
-    "exact-by-construction only on the broadcast route; on the "
-    "above-budget LSH route exactness is MEASURED, not structural: "
-    "tests force the LSH route (shrunken budget) and hash-match the "
-    "oracle at every test SF (6 hash tables recover 100% of the "
-    "cos>=0.45 pairs there). A recall probe on a larger corpus is the "
-    "deploy-time gate at 100 TB.",
+    "exact on both routes; tests force the above-budget blocked route "
+    "(shrunken budget) and hash-match the oracle.",
 )
 def q87_semantic_dedup(
     spark: SparkSession, sf_dir: str, broadcast_budget_bytes: int | None = None

@@ -1,15 +1,18 @@
 """Similarity search & near-duplicate detection (SURVEY §2.3 X2/X3;
 north-star families "dedup" and "similarity search").
 
-q42 (LSH candidates + exact verification) and q43 (exact cosine top-k)
-are tier-1 hash-checked; the rest are tier-2 (rows-only): raw LSH
-bucketing and float accumulation are not hash-comparable across
-engines (SURVEY §2.5 D7, §7 H5), but every query here is internally
-deterministic — seeds fixed, ties broken on ids — so reruns are stable.
+q42 (MinHash band candidates + exact verification) and q43 (exact
+cosine top-k) are tier-1 hash-checked; the rest are tier-2
+(rows-only): raw LSH bucketing and float accumulation are not
+hash-comparable across engines (SURVEY §2.5 D7, §7 H5), but every
+query here is internally deterministic — seeds fixed, ties broken on
+ids — so reruns are stable.
 
 Scale posture per query:
-- MinHashLSH / BucketedRandomProjectionLSH: candidate generation is a
-  band-bucket equi-join — shuffle on bucket keys, never O(n²).
+- MinHash (minhash_bands, the one family q42 and the streaming
+  near-dup sinks share) / BucketedRandomProjectionLSH: candidate
+  generation is a band-bucket equi-join — shuffle on bucket keys,
+  never O(n²).
 - SimHash: 64-bit fingerprints + 4×16-bit band join; candidate pairs
   verified by popcount(xor) — pure JVM bit ops.
 - Exact brute-force variants exist as correctness baselines; each
@@ -17,6 +20,8 @@ Scale posture per query:
 """
 
 from __future__ import annotations
+
+import random
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,55 +114,60 @@ def _verify_jaccard_pairs(cand: DataFrame, sh: DataFrame) -> DataFrame:
     )
 
 
-def _minhash_band_table(sh: DataFrame, n_bands: int, band_rows: int) -> DataFrame:
-    """(doc_id, band, key) compound MinHash band rows: per band, the
-    bucket key is the struct of ``band_rows`` independent seeded affine
-    minhashes over murmur3 shingle hashes (the pure-expression family
-    streaming/neardup.py introduced in round 14 — JVM-side, no ML
-    pipeline fit). One shuffle (the per-doc mins)."""
-    import random
+#: The package's one MinHash family: 16 seeded affine hashes over a
+#: 31-bit Mersenne prime, applied to murmur3 shingle hashes. Drawn from
+#: SEED alone at import, so every query, micro-batch and process gets
+#: the SAME family and the band stores streaming/neardup.py and
+#: streaming/curation.py persist stay joinable forever; the products
+#: stay inside int64 (a < 2^29, x < 2^31 → a·x+b < 2^60).
+_MINHASH_BANDS = 16
+_MINHASH_P = (1 << 31) - 1
+_MINHASH_RND = random.Random(SEED)
+_MINHASH_COEFFS = [
+    (_MINHASH_RND.randrange(1, 1 << 29), _MINHASH_RND.randrange(0, 1 << 29))
+    for _ in range(_MINHASH_BANDS)
+]
 
-    rnd = random.Random(SEED)
-    p = (1 << 31) - 1
-    coeffs = [
-        (rnd.randrange(1, 1 << 29), rnd.randrange(0, 1 << 29))
-        for _ in range(n_bands * band_rows)
-    ]
+
+def minhash_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, band, h) MinHash band rows over a (doc_id, shingle)
+    table — 16 single-hash bands as pure JVM expressions: murmur3 the
+    shingle, apply the seeded affine family, min per doc, explode to
+    band rows. One shuffle (the per-doc min), whole-stage codegen end
+    to end, no ML pipeline fit. A pair at Jaccard J shares no band
+    with probability (1−J)^16 (≈ 4·10⁻⁷ at the J = 0.6 threshold).
+    Docs with no shingle produce no rows."""
     x = F.hash("shingle").cast("long").bitwiseAND(F.lit(0x7FFFFFFF))
-    hs = sh.select("doc_id", x.alias("x"))
-    mins = hs.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(p)).alias(f"h{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
+    mins = (
+        sh.select("doc_id", x.alias("x"))
+        .groupBy("doc_id")
+        .agg(
+            *[
+                F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(_MINHASH_P)).alias(
+                    f"h{i}"
+                )
+                for i, (a, b) in enumerate(_MINHASH_COEFFS)
+            ]
+        )
     )
     return mins.select(
         "doc_id",
         F.posexplode(
-            F.array(
-                *[
-                    F.struct(
-                        *[
-                            F.col(f"h{i * band_rows + r}").alias(f"r{r}")
-                            for r in range(band_rows)
-                        ]
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band", "key"),
+            F.array(*[F.col(f"h{i}") for i in range(_MINHASH_BANDS)])
+        ).alias("band", "h"),
     )
 
 
 def _band_self_join(bands: DataFrame) -> DataFrame:
-    """(da, db) distinct candidate pairs from a band table — the bucket
-    equi-join; shuffle keyed on (band, key), never O(n²) plan-side."""
+    """(da, db) distinct candidate pairs (da < db) from a minhash_bands
+    table — the bucket equi-join; shuffle keyed on (band, h), never
+    O(n²) plan-side."""
     return (
         bands.alias("a")
         .join(
             bands.alias("b"),
             (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.h") == F.col("b.h"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
@@ -165,135 +175,30 @@ def _band_self_join(bands: DataFrame) -> DataFrame:
     )
 
 
-def minhash_band_candidates(
-    sh: DataFrame, n_bands: int, band_rows: int
-) -> DataFrame:
-    """Compound-band MinHash candidate pairs (the q42 escape hatch,
-    measured output-identical to the stock path at sf3 AND sf10 —
-    SCALE.md §Round-15): per-pair candidate probability per band is
-    J^band_rows, miss-all probability (1−J^band_rows)^n_bands."""
-    return _band_self_join(_minhash_band_table(sh, n_bands, band_rows))
-
-
-#: auto-escalation ladder for SPARK_GRAFT_Q42_BANDS=auto — (r, b) with
-#: near-constant worst-case miss probability at J=0.6: r=1,b=16 →
-#: 4.3e-7; r=2,b=32 → 6.3e-7; r=3,b=64 → 1.7e-7. Escalate while the
-#: BUCKET-PRICED candidate estimate (Σ C(bucket,2), an O(band-rows)
-#: groupBy — no enumeration) exceeds _Q42_AUTO_CAND_PER_DOC × docs:
-#: on bounded-vocab corpora buckets saturate and r=1 candidates grow
-#: quadratically (sf3→sf10 exponent 1.92 measured), while r=3 is
-#: near-output-sized (exponent 1.28).
-_Q42_AUTO_LADDER = ((1, 16), (2, 32), (3, 64))
-_Q42_AUTO_CAND_PER_DOC = 64
-
-
-def _q42_candidates(spark: SparkSession, sh: DataFrame) -> DataFrame:
-    """Candidate generator behind the SPARK_GRAFT_Q42_BANDS knob
-    (VERDICT r15 item 5 — the sf10 probe's insurance policy as one
-    flag): unset/'stock' → the ML MinHashLSH path; 'R,B' → compound
-    bands at exactly that config; 'auto' → walk _Q42_AUTO_LADDER,
-    pricing each rung by bucket mass before enumerating."""
-    import os
-
-    cfg = os.environ.get("SPARK_GRAFT_Q42_BANDS", "").strip().lower()
-    if not cfg or cfg == "stock":
-        from pyspark.ml.feature import HashingTF, MinHashLSH
-
-        feats = sh.groupBy("doc_id").agg(
-            F.collect_list("shingle").alias("tokens")
-        )
-        tf = HashingTF(
-            inputCol="tokens", outputCol="features", numFeatures=1 << 16
-        )
-        vecs = tf.transform(feats)
-        # 16 tables: per-pair miss probability (1-s)^16 — 4.3e-7 at the
-        # s=0.6 threshold, 6.6e-12 at a typical near-dup s=0.8. Measured
-        # at sf0.1: identical pair set and wall-clock vs 6 tables (the
-        # candidate-dedup + verify stages dominate, not table count).
-        lsh = MinHashLSH(
-            inputCol="features",
-            outputCol="hashes",
-            numHashTables=16,
-            seed=SEED,
-        )
-        model = lsh.fit(vecs)
-        pairs = model.approxSimilarityJoin(
-            vecs, vecs, 0.45, distCol="jaccard_dist"
-        )
-        return (
-            pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-            .select(
-                F.col("datasetA.doc_id").alias("da"),
-                F.col("datasetB.doc_id").alias("db"),
-            )
-            .distinct()
-        )
-    if cfg == "auto":
-        # bounded-collect: one scalar per rung (docs count + Σ C(n,2)
-        # over buckets) — pricing is a groupBy-count, never enumeration
-        n_docs = sh.select("doc_id").distinct().count()
-        budget = _Q42_AUTO_CAND_PER_DOC * max(n_docs, 1)
-        for r, b in _Q42_AUTO_LADDER:
-            bands = _minhash_band_table(sh, b, r)
-            if (r, b) == _Q42_AUTO_LADDER[-1]:
-                return _band_self_join(bands)  # last rung: no pricing
-            est = (
-                bands.groupBy("band", "key")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(
-                    F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("c")
-                )
-                # bounded-collect: single-row global aggregate (one scalar)
-                .collect()[0]["c"]
-            )
-            if est is not None and est <= budget:
-                return _band_self_join(bands)
-        raise AssertionError("unreachable: ladder always returns")
-    try:
-        r_s, b_s = cfg.split(",")
-        r, b = int(r_s), int(b_s)
-    except ValueError:
-        raise ValueError(
-            "SPARK_GRAFT_Q42_BANDS must be unset, 'stock', 'auto', or "
-            f"'R,B' (rows-per-band, bands) — got {cfg!r}"
-        ) from None
-    if r < 1 or b < 1:
-        raise ValueError(f"SPARK_GRAFT_Q42_BANDS: R and B must be >= 1, got {cfg!r}")
-    return minhash_band_candidates(sh, b, r)
-
-
 @register(
     "q42",
     # oracle: same ground truth as the exact inverted-index twin (q46) —
-    # LSH generates candidates, exact verification decides membership,
-    # so the output must equal the full exact-Jaccard pair set.
+    # MinHash bands generate candidates, exact verification decides
+    # membership, so the output must equal the full exact-Jaccard pair set.
     JACCARD_NEARDUP_SQL,
-    doc="X2 MinHashLSH near-dup — 5-word shingles → HashingTF → MinHash "
-    "banding → approxSimilarityJoin candidates (hashed-Jaccard distance "
-    "≤ 0.45 for slack), then EXACT Jaccard ≥ 0.6 verification on the "
-    "candidate set only (_verify_jaccard_pairs). Seeded (H5). This is "
-    "the 100 TB near-dup pipeline shape: candidates from bucket "
-    "equi-joins (never O(n²)), exact verification bounded by the "
-    "candidate count. Oracle = the full exact pair set (q46's SQL). "
-    "Recall is probabilistic BY DESIGN: a pair at Jaccard s misses "
-    "every one of h single-hash tables with P=(1-s)^h, so at h=16 a "
-    "worst-case just-at-threshold pair (s=0.6) is missed with "
+    doc="X2 MinHash near-dup — 5-word shingles → minhash_bands (16 "
+    "seeded single-hash bands as JVM expressions: murmur3, affine "
+    "family, per-doc min) → band self-join candidates keyed on "
+    "(band, h), then EXACT Jaccard ≥ 0.6 verification on the candidate "
+    "set only (_verify_jaccard_pairs). The streaming near-dup and "
+    "curation sinks use the same band kernel, so batch and stream share "
+    "one hash family. Seeded (H5). This is the 100 TB near-dup pipeline "
+    "shape: candidates from bucket equi-joins (never O(n²)), exact "
+    "verification bounded by the candidate count. Oracle = the full "
+    "exact pair set (q46's SQL). Recall is probabilistic BY DESIGN: a "
+    "pair at Jaccard s shares none of the 16 bands with P=(1-s)^16, so "
+    "a worst-case just-at-threshold pair (s=0.6) is missed with "
     "P=4.3e-7, and a typical near-dup (s≥0.8) with P≤6.6e-12 — "
     "per-pair odds small enough that the exact-oracle check holds for "
     "any plausible dataset, but on adversarial data with millions of "
     "exactly-at-threshold pairs the check is dataset-conditional, not "
     "unconditional; q46 is the deterministic twin. Measured recall "
-    "here: 100% at sf0.01/sf0.1, and raising h from 6 to 16 was free "
-    "(candidate dedup dominates, not table count). BANDING KNOB "
-    "(VERDICT r15 item 5): SPARK_GRAFT_Q42_BANDS='R,B' swaps the "
-    "candidate stage for compound bands (R minhash rows per band, B "
-    "bands — miss (1−J^R)^B; '2,32' and '3,64' measured "
-    "output-identical to stock at sf3 AND sf10, with r=3 the exponent "
-    "escape on bucket-saturating bounded-vocab corpora: candidate "
-    "exponent 1.28 vs stock 1.92); 'auto' walks the (1,16)→(2,32)→"
-    "(3,64) ladder, pricing each rung by bucket mass (Σ C(bucket,2), "
-    "a groupBy — never enumeration) and escalating while the estimate "
-    "exceeds 64×docs. Verification is identical on every path.",
+    "here: 100% at sf0.01/sf0.1.",
 )
 def q42(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -303,7 +208,7 @@ def q42(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow recompute it saves (2.2 s vs 2.7 s warm at sf0.1 — the
     # same trade connected_components documented in r6)
     sh = _shingles(docs, n=5)
-    return _verify_jaccard_pairs(_q42_candidates(spark, sh), sh)
+    return _verify_jaccard_pairs(_band_self_join(minhash_bands(sh)), sh)
 
 
 def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
@@ -584,49 +489,6 @@ def q51_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 COSINE_BROADCAST_BUDGET_BYTES = 8 << 20
 
 
-def _cosine_pairs_lsh(emb: DataFrame, threshold: float = 0.45) -> DataFrame:
-    """Scale path for cosine near-dup pairs: unit-normalize, bucket with
-    BucketedRandomProjectionLSH (euclidean on the unit sphere is
-    monotone in cosine: d² = 2−2cos), approxSimilarityJoin for
-    candidates, then EXACT cosine per candidate pair via JVM
-    higher-order functions — no Python, no O(n²), no driver collect."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-    from pyspark.ml.functions import array_to_vector
-
-    arr = F.col("embedding").cast("array<double>")
-    vecs = emb.select("vec_id", arr.alias("arr"), array_to_vector(arr).alias("raw"))
-    unit = Normalizer(inputCol="raw", outputCol="unit", p=2.0).transform(vecs)
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="unit", outputCol="hashes", bucketLength=0.5, numHashTables=6, seed=SEED
-    )
-    model = lsh.fit(unit)
-    max_dist = (2.0 - 2.0 * threshold) ** 0.5
-    pairs = model.approxSimilarityJoin(unit, unit, max_dist, distCol="euclid")
-
-    a_arr, b_arr = F.col("datasetA.arr"), F.col("datasetB.arr")
-    dot = F.aggregate(
-        F.zip_with(a_arr, b_arr, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))  # noqa: E731
-    cos = dot / (norm(a_arr) * norm(b_arr))
-    return (
-        pairs.filter(F.col("datasetA.vec_id") < F.col("datasetB.vec_id"))
-        .select(
-            F.col("datasetA.vec_id").alias("vec_id_a"),
-            F.col("datasetB.vec_id").alias("vec_id_b"),
-            cos.alias("cos_raw"),
-        )
-        # threshold on the UNROUNDED cosine — the broadcast path and the
-        # oracle both do; filtering the rounded value would admit pairs
-        # in [threshold - 5e-5, threshold) that they exclude
-        .filter(F.col("cos_raw") >= threshold)
-        .select(
-            "vec_id_a", "vec_id_b", F.round("cos_raw", 4).alias("cos_sim")
-        )
-        .distinct()
-    )
-
-
 # Exact cosine>=0.45 pair set over the embeddings table — q54's oracle,
 # and the pair-graph input to q87's semantic-dedup components oracle.
 COSINE_NEARDUP_SQL = """
@@ -670,8 +532,8 @@ def _cosine_pairs_blocked(
     exactly ONE cell (i<j inside diagonal cells; cross-product in
     off-diagonal cells), so no distinct() is needed and numeric
     results are bit-identical to the broadcast route (same BLAS, same
-    round). _cosine_pairs_lsh remains available for HIGH-threshold
-    clustered corpora where bucketing genuinely prunes."""
+    round). For HIGH-threshold clustered corpora, where bucketing does
+    prune, _cosine_pairs_ivf is the candidate route."""
     import math
 
     import numpy as np
@@ -967,15 +829,13 @@ def r69_neardup_ivf_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pruning that a low threshold on an unclustered corpus does not "
     "provide (measured: BRP-LSH at tau=0.45 degenerates to all-pairs "
     "through the approxSimilarityJoin machinery and loses to the "
-    "dense route; _cosine_pairs_lsh stays available for "
-    "high-threshold clustered corpora). Tier-1: at "
+    "dense route). Tier-1: at "
     "sf0.01 every pair's cosine sits ≥5.5e-4 from the 0.45 threshold "
     "and ≥2.4e-6 from its 4dp rounding boundary (measured), so the "
     "numpy and DuckDB float paths (both double) agree bit-for-bit "
-    "after ROUND(...,4). The LSH route's recall is MEASURED, not "
-    "guaranteed: on every test SF its pair set is identical to the "
-    "broadcast route's (tests force it via the budget param); a "
-    "production corpus should re-probe recall before trusting it.",
+    "after ROUND(...,4). Both routes are exact: tests force the "
+    "blocked route via the budget param and require the broadcast "
+    "route's pair set.",
 )
 def q54_cosine_neardup(
     spark: SparkSession, sf_dir: str, broadcast_budget_bytes: int | None = None
@@ -1524,8 +1384,8 @@ _DBSCAN_MINPTS = 3  # neighbors including self => degree >= 2
     """,
     doc="DBSCAN over the embeddings — density clustering from the "
     "repo's own primitives: the eps-neighborhood is the EXACT cosine "
-    "≥ 0.45 pair set (q54's relation — broadcast-BLAS or LSH route, "
-    "both measured pair-identical), core points have ≥ minPts−1 "
+    "≥ 0.45 pair set (q54's relation — broadcast-BLAS or blocked "
+    "all-pairs route, both exact), core points have ≥ minPts−1 "
     "neighbors, clusters are connected components over CORE-CORE "
     "edges (the q74 pointer-jumped propagation; oracle: recursive-CTE "
     "closure), isolated cores self-label, and border points take the "
@@ -1533,7 +1393,7 @@ _DBSCAN_MINPTS = 3  # neighbors including self => degree >= 2
     "border assignment scan-order-dependent, this formulation pins it "
     "deterministically. Noise surfaces as cluster −1 (counted, not "
     "dropped). At 100 TB the shape is pair-graph-bounded end to end: "
-    "candidates from the LSH route, components touch only core-core "
+    "pairs from the blocked route, components touch only core-core "
     "edges, border assignment is one join on the pair list.",
 )
 def r59_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -785,14 +785,8 @@ def r80_streaming_ssjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-store rows' — at toy SF 2 partitions measured 1.7x faster
     # than the house default 8 with identical output, while the
     # 32 MB-per-partition rule grows the count linearly with wire
-    # volume (256 MB wire -> 8, 32 GB -> the 200 cap; a cluster
-    # deployment overrides via SPARK_GRAFT_STREAM_PARTITIONS).
-    env_parts = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    n_parts = (
-        int(env_parts)
-        if env_parts
-        else max(2, min(200, wire_bytes // (32 << 20) + 1))
-    )
+    # volume (256 MB wire -> 8, 32 GB -> the 200 cap).
+    n_parts = max(2, min(200, wire_bytes // (32 << 20) + 1))
     # ADVICE r16: with the flush file folded into batch 0, the outer
     # (NULL) rows are emitted by availableNow's trailing NO-DATA
     # micro-batch — which only runs while

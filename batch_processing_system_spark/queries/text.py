@@ -76,9 +76,9 @@ def q45_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared by q46 (inverted-index exact) and q42 (MinHashLSH candidates +
-# exact verification): both must produce exactly the Jaccard>=0.6 pairs,
-# so they check against the same ground-truth SQL.
+# Shared by q46 (inverted-index exact) and q42 (MinHash band candidates
+# + exact verification): both must produce exactly the Jaccard>=0.6
+# pairs, so they check against the same ground-truth SQL.
 JACCARD_NEARDUP_SQL = """
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
     sh AS (SELECT DISTINCT doc_id,

@@ -21,9 +21,9 @@ replay contract the other twins share:
   one (both are documented contracts; q75 defines this one);
 - split: md5(doc_id) first hex digit, 0-c → train (map-side).
 
-Candidate generation is MinHash banding (the q42 family, seed-stable
-across batches); recall vs the exact inverted index is MEASURED by the
-equality test, not assumed.
+Candidate generation is MinHash banding (similarity.minhash_bands, the
+family q42 uses, seed-stable across batches); recall vs the exact
+inverted index is MEASURED by the equality test, not assumed.
 
 Idempotency under foreachBatch's at-least-once replay: every write —
 the three state stores AND the accepted output — is keyed by the
@@ -46,11 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..engine.io import local_frame
-from .neardup import (
-    BAND_SCHEMA,
-    _band_table,
-    _verified_pairs,
-)
+from ..queries.similarity import _band_self_join, _shingles, _verify_jaccard_pairs
+from .neardup import BAND_SCHEMA, _band_cross_join, _band_table
 
 INCOMING_CURATION_SCHEMA = T.StructType(
     [
@@ -108,8 +105,6 @@ def curation_batch(
     persistent stores under ``state_dir``; returns the accepted rows.
     All store writes are keyed by ``batch_id`` and overwritten, so
     re-running the same (batch, batch_id) is a no-op state-wise."""
-    from ..queries.similarity import _shingles
-
     docs_path = os.path.join(state_dir, "docs")
     bands_path = os.path.join(state_dir, "bands")
     digests_path = os.path.join(state_dir, "digests")
@@ -131,30 +126,11 @@ def curation_batch(
     # --- near-dup b-side rule vs EVERY earlier doc -------------------
     bands = _band_table(batch).localCheckpoint(eager=True)
     store_bands = _read_store(spark, bands_path, BAND_SCHEMA, batch_id)
-    cross = (
-        bands.alias("new")
-        .join(
-            store_bands.alias("old"),
-            (F.col("new.band") == F.col("old.band"))
-            & (F.col("new.h") == F.col("old.h")),
-        )
-        .select(
-            F.col("old.doc_id").alias("da"), F.col("new.doc_id").alias("db")
-        )
+    cand = (
+        _band_cross_join(bands, store_bands)
+        .unionAll(_band_self_join(bands))
         .distinct()
     )
-    wb = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-    )
-    cand = cross.unionAll(wb).distinct()
     store_docs = _read_store(spark, docs_path, _DOC_SCHEMA, batch_id)
     involved_old = store_docs.join(
         cand.select(F.col("da").alias("doc_id")).distinct(),
@@ -165,7 +141,7 @@ def curation_batch(
         batch.select("doc_id", "text").unionByName(involved_old), n=5
     ).localCheckpoint(eager=True)
     near_rejected = (
-        _verified_pairs(cand, sh_union)
+        _verify_jaccard_pairs(cand, sh_union)
         .select(F.col("doc_id_b").alias("doc_id"))
         .distinct()
     )

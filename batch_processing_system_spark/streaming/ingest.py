@@ -38,7 +38,6 @@ def stream_results_into_store(
     output_schema_json: str,
     checkpoint: str,
     now=None,
-    strict: bool = False,
 ):
     """Wire the stream to the manifest-committed store
     (pipeline/commitstore.py). Returns the DataStreamWriter (caller
@@ -74,9 +73,7 @@ def stream_results_into_store(
             batch_now = now()
         else:
             batch_now = now
-        updates = build_update_records(
-            batch_df, output_schema_json, batch_now, strict=strict
-        )
+        updates = build_update_records(batch_df, output_schema_json, batch_now)
         commitstore.upsert_store(batch_df.sparkSession, store_root, updates)
 
     return outcomes.writeStream.foreachBatch(merge_batch).option(

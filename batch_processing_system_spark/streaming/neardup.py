@@ -16,10 +16,11 @@ State is externalized to two parquet stores, like the exact twin:
   re-shingles only the candidates' texts (bounded by the candidate
   set, the q42 discipline).
 
-MinHash hash functions are drawn from the SEED alone (verified by
-test: two fits on disjoint data transform identically), so per-batch
-fits across the stream's life are ONE consistent hash family — the
-band store stays joinable forever.
+Bands come from queries/similarity.minhash_bands, the package's one
+MinHash family (q42 uses it too): its hash functions are drawn from a
+fixed seed at import, so every batch across the stream's life — and
+every process — hashes with the SAME family, and the band store stays
+joinable forever.
 
 Within a batch, survivors are decided by greedy ascending-doc_id over
 the VERIFIED pair graph (chain a~b, b~c, a≁c keeps a AND c — exactly
@@ -38,7 +39,6 @@ driver-memory ceiling on batch size.
 
 from __future__ import annotations
 
-import random
 from collections import defaultdict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,9 +47,12 @@ from pyspark.sql import types as T
 
 from ..engine.io import local_frame
 from ..pipeline.statestore import read_state
-
-SEED = 42
-N_TABLES = 16
+from ..queries.similarity import (
+    _band_self_join,
+    _shingles,
+    _verify_jaccard_pairs,
+    minhash_bands,
+)
 
 #: verified-pair-count knee between the two within-batch greedy
 #: resolutions (VERDICT r14 item 8): at or below it the pair graph is
@@ -68,19 +71,6 @@ _WB_MIS_THRESHOLD = 100_000
 #: round); an adversarial 128-deep ascending chain of >100k pairs
 #: fails loudly rather than looping forever.
 _MIS_MAX_ROUNDS = 128
-
-#: MinHash family drawn from SEED alone at import (VERDICT r13 item 2
-#: refactor): module-level affine coefficients over a 31-bit Mersenne
-#: prime, applied to murmur3 shingle hashes as pure JVM expressions.
-#: Every batch across the stream's life — and every process — produces
-#: the SAME family, so the band store stays joinable forever; the
-#: products stay inside int64 (a < 2^29, x < 2^31 → a·x+b < 2^60).
-_MH_P = (1 << 31) - 1
-_MH_RND = random.Random(SEED)
-_MH_COEFFS = [
-    (_MH_RND.randrange(1, 1 << 29), _MH_RND.randrange(0, 1 << 29))
-    for _ in range(N_TABLES)
-]
 
 INCOMING_DOC_SCHEMA = T.StructType(
     [
@@ -114,47 +104,25 @@ CORPUS_SCHEMA = T.StructType(
 
 
 def _band_table(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, h) MinHash band rows for a document set — 16
-    single-hash bands (the same table count q42's LSH uses, so the
-    recall math is identical: a J ≥ 0.6 pair misses all bands with
-    probability ≤ (1−0.6)^16 ≈ 4·10⁻⁷), computed as pure JVM
-    expressions: murmur3 the shingle, apply the seeded affine family,
-    min per doc, explode to band rows. One shuffle (the per-doc min),
-    whole-stage codegen end to end — no ML pipeline, no per-batch
-    fit job (VERDICT r13 item 2: this is what keeps the r78 catalog
-    row's per-micro-batch cost flat). Docs too short to shingle
+    """(doc_id, band, h) MinHash band rows for a document set: the
+    5-shingles through minhash_bands. Docs too short to shingle
     simply produce no rows."""
-    from ..queries.similarity import _shingles
-
-    return _band_table_from_shingles(_shingles(docs, n=5))
+    return minhash_bands(_shingles(docs, n=5))
 
 
-def _band_table_from_shingles(sh: DataFrame) -> DataFrame:
-    """_band_table over an already-materialized (doc_id, shingle)
-    table — callers that also need the shingles for verification
-    (neardup_batch) shingle ONCE and feed both consumers."""
-    x = F.hash("shingle").cast("long").bitwiseAND(F.lit(0x7FFFFFFF))
-    hs = sh.select("doc_id", x.alias("x"))
-    mins = hs.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(_MH_P)).alias(
-                f"h{i}"
-            )
-            for i, (a, b) in enumerate(_MH_COEFFS)
-        ]
+def _band_cross_join(bands: DataFrame, store_bands: DataFrame) -> DataFrame:
+    """(da, db) distinct candidate pairs of a stored doc (da) and an
+    arriving doc (db) that share a MinHash band."""
+    return (
+        bands.alias("new")
+        .join(
+            store_bands.alias("old"),
+            (F.col("new.band") == F.col("old.band"))
+            & (F.col("new.h") == F.col("old.h")),
+        )
+        .select(F.col("old.doc_id").alias("da"), F.col("new.doc_id").alias("db"))
+        .distinct()
     )
-    return mins.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"h{i}") for i in range(N_TABLES)])
-        ).alias("band", "h"),
-    ).select("doc_id", F.col("band").cast("int").alias("band"), "h")
-
-
-def _verified_pairs(cand: DataFrame, sh: DataFrame) -> DataFrame:
-    from ..queries.similarity import _verify_jaccard_pairs
-
-    return _verify_jaccard_pairs(cand, sh)
 
 
 def _decisions_driver(
@@ -354,8 +322,6 @@ def neardup_batch(
     (cross-batch matches win over within-batch ones — the earlier
     arrival IS the canonical copy). Survivors' texts and bands are
     appended to the stores."""
-    from ..queries.similarity import _shingles
-
     # bounded-collect: micro-batch id list (batch-sized, not corpus)
     batch_ids = sorted(r["doc_id"] for r in batch.select("doc_id").collect())
     if not batch_ids:
@@ -373,34 +339,12 @@ def neardup_batch(
     # the bands checkpoint) costs less than materializing every shingle
     # row.
     sh_batch = _shingles(batch, n=5)
-    bands = _band_table_from_shingles(sh_batch).localCheckpoint(eager=True)
+    bands = minhash_bands(sh_batch).localCheckpoint(eager=True)
     store_bands = read_state(spark, bands_path, BAND_SCHEMA)
 
     # --- candidates: cross-batch (batch ⋈ store) + within-batch ------
-    cross = (
-        bands.alias("new")
-        .join(
-            store_bands.alias("old"),
-            (F.col("new.band") == F.col("old.band"))
-            & (F.col("new.h") == F.col("old.h")),
-        )
-        .select(
-            F.col("old.doc_id").alias("da"),  # kept doc
-            F.col("new.doc_id").alias("db"),  # arrival
-        )
-        .distinct()
-    )
-    wb_cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-    )
+    cross = _band_cross_join(bands, store_bands)
+    wb_cand = _band_self_join(bands)
     corpus = read_state(spark, corpus_path, CORPUS_SCHEMA)
     # the anti-join against the batch's ids is REQUIRED (ADVICE r15,
     # medium): under id redelivery the store holds a copy of a doc_id
@@ -425,7 +369,7 @@ def neardup_batch(
     # (a, b) pair arrives from both cross and wb_cand, and a duplicate
     # candidate row would double n_common inside
     # _verify_jaccard_pairs' count, corrupting the Jaccard test.
-    verified_df = _verified_pairs(
+    verified_df = _verify_jaccard_pairs(
         cross.unionByName(wb_cand).distinct(), sh_union
     ).select("doc_id_a", "doc_id_b")
     # bounded-collect up to the knee: verified near-dup pairs are

@@ -96,11 +96,11 @@ class TestTimestampFlavorProof:
 
 
 class TestQ87AboveBudgetRoute:
-    """VERDICT r4 item 2: the above-budget pair generator
-    (_cosine_pairs_lsh) was never validated end-to-end for q87 — one
-    missed edge splits a component and flips many kept flags. These
-    tests force the LSH route by shrinking the broadcast budget to a
-    single byte and demand exact agreement with the oracle."""
+    """VERDICT r4 item 2: the above-budget pair generator must be
+    validated end-to-end for q87 — one missed edge splits a component
+    and flips many kept flags. These tests force the blocked all-pairs
+    route (_cosine_pairs_blocked) by shrinking the broadcast budget to
+    a single byte and demand exact agreement with the oracle."""
 
     def _oracle(self, sf_dir, sql):
         import duckdb

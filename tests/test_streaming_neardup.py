@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from batch_processing_system_spark.engine.io import load_table
+from batch_processing_system_spark.queries.similarity import _shingles, minhash_bands, q42
 from batch_processing_system_spark.queries.text import q46_neardup_jaccard
 from batch_processing_system_spark.streaming.neardup import (
     neardup_batch,
@@ -34,6 +35,34 @@ DOC_E = "too short here"
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+class TestMinhashBands:
+    """The one MinHash family behind q42 and the streaming sinks. The
+    rows are pinned: band stores persisted by earlier runs must stay
+    joinable with every new batch."""
+
+    _H = {
+        1: [1276416757, 1703585766, 18968970, 1220621378, 744442657, 470538682,
+            1281971459, 8972015, 574877973, 211862454, 1232293488, 1842562592,
+            1120363221, 245988945, 521381459, 1465419343],
+        2: [122633652, 204891163, 18968970, 1949515565, 978813943, 470538682,
+            1281971459, 8972015, 642839097, 211862454, 1232293488, 1393205572,
+            1120363221, 1278743467, 336217689, 848302980],
+    }  # doc 3 is too short to shingle: no rows
+
+    def test_rows_match_persisted_band_stores(self, spark):
+        docs = _df(spark, [(1, "the quick brown fox jumps over"),
+                           (2, "the quick brown fox jumps high"), (3, DOC_E)])
+        bands = minhash_bands(_shingles(docs, n=5))
+        assert bands.schema.simpleString() == "struct<doc_id:bigint,band:int,h:bigint>"
+        want = [(d, b, h) for d, hs in self._H.items() for b, h in enumerate(hs)]
+        assert sorted(map(tuple, bands.collect())) == want
+
+    def test_q42_equals_exact_twin(self, spark):
+        got = sorted(map(tuple, q42(spark, SF_SMALL).collect()))
+        assert got
+        assert got == sorted(map(tuple, q46_neardup_jaccard(spark, SF_SMALL).collect()))
 
 
 class TestBatchGreedy:
