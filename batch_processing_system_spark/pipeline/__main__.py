@@ -37,8 +37,9 @@ from pyspark.sql import SparkSession
 
 from .httpremote import HttpBatchRemote
 from .localremote import DirectoryRemote
-from .run import run_poll_cycle, submit_batch
+from .run import run_poll_cycle
 from .schemas import BATCH_JOB_SCHEMA, INACTIVE_INTERNAL, document_schema
+from .server import make_server, submit_and_persist
 from .state import active_jobs
 from .statestore import read_state as _read_state
 from .statestore import rewrite_state as _rewrite_state
@@ -76,28 +77,18 @@ def cmd_submit(args: argparse.Namespace) -> int:
         schema_json = open(args.schema_file).read()
     else:
         schema_json = args.schema_json
-    docs = _read_state(spark, args.docs, document_schema())
-    jobs = _read_state(spark, args.jobs, BATCH_JOB_SCHEMA)
-    remote = _make_remote(args)
-    job_id = args.job_id or f"job-{uuid.uuid4().hex[:12]}"
-
-    out = submit_batch(
+    out = submit_and_persist(
         spark,
         args.jsonl,
         schema_json,
-        docs,
-        remote,
-        job_id,
+        args.docs,
+        args.jobs,
+        _make_remote(args),
+        args.job_id or f"job-{uuid.uuid4().hex[:12]}",
         _parse_now(args.now),
         collection_name=args.collection,
         mongodb_uri=args.mongodb_uri,
     )
-    try:
-        if not out.errors:
-            _rewrite_state(jobs.unionByName(out.jobs), args.jobs)
-            _rewrite_state(out.marked_docs, args.docs)
-    finally:
-        out.upload.unpersist()
     if out.errors:
         print(json.dumps(out.error_body()))
         return 2
@@ -149,8 +140,6 @@ def cmd_poll(args: argparse.Namespace) -> int:
 
 
 def cmd_serve(args: argparse.Namespace) -> int:
-    from .server import make_server
-
     srv = make_server(_get_spark(), args.docs, args.jobs, args.remote, args.port)
     print(json.dumps({"listening": srv.server_address[1]}), flush=True)
     srv.serve_forever()

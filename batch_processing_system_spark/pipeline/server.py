@@ -29,7 +29,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import SparkSession
 
 from .localremote import DirectoryRemote
-from .run import submit_batch
+from .run import SubmissionOutcome, submit_batch
 from .schemas import BATCH_JOB_SCHEMA, document_schema
 from .statestore import read_state, rewrite_state
 
@@ -41,6 +41,49 @@ REQUIRED_FIELDS = ("jsonl_file", "output_schema_json", "mongodb_uri", "collectio
 # the last rewrite wins and drops the other's job row. Parsing and the
 # HTTP I/O stay parallel; only the state transaction takes the lock.
 _STATE_LOCK = threading.Lock()
+
+
+def submit_and_persist(
+    spark: SparkSession,
+    jsonl_path: str,
+    schema_json: str,
+    docs_path: str,
+    jobs_path: str,
+    remote,
+    job_id: str,
+    now,
+    *,
+    collection_name: str,
+    mongodb_uri: str,
+) -> SubmissionOutcome:
+    """One submission transaction, shared by ``serve`` and ``submit``:
+    read both snapshots, ``submit_batch``, and when it is accepted
+    append the job row and rewrite the docs with their in_progress
+    marks (jobs first, then docs). The cached upload is unpersisted
+    before returning, so a long-running server keeps none per request."""
+    out = None
+    try:
+        with _STATE_LOCK:
+            docs = read_state(spark, docs_path, document_schema())
+            jobs = read_state(spark, jobs_path, BATCH_JOB_SCHEMA)
+            out = submit_batch(
+                spark,
+                jsonl_path,
+                schema_json,
+                docs,
+                remote,
+                job_id,
+                now,
+                collection_name=collection_name,
+                mongodb_uri=mongodb_uri,
+            )
+            if not out.errors:
+                rewrite_state(jobs.unionByName(out.jobs), jobs_path)
+                rewrite_state(out.marked_docs, docs_path)
+    finally:
+        if out is not None:
+            out.upload.unpersist()
+    return out
 
 
 def _parse_multipart(content_type: str, body: bytes) -> dict[str, bytes]:
@@ -120,30 +163,20 @@ class PipelineHandler(BaseHTTPRequestHandler):
         ) as tf:
             tf.write(fields["jsonl_file"])
             jsonl_path = tf.name
-        out = None
         try:
-            with _STATE_LOCK:
-                docs = read_state(self.spark, self.docs_path, document_schema())
-                jobs = read_state(self.spark, self.jobs_path, BATCH_JOB_SCHEMA)
-                out = submit_batch(
-                    self.spark,
-                    jsonl_path,
-                    fields["output_schema_json"].decode(),
-                    docs,
-                    DirectoryRemote(self.remote_root),
-                    f"job-{uuid.uuid4().hex[:12]}",
-                    self.now_fn(),
-                    collection_name=fields["collection_name"].decode(),
-                    mongodb_uri=fields["mongodb_uri"].decode(),
-                )
-                if not out.errors:
-                    rewrite_state(jobs.unionByName(out.jobs), self.jobs_path)
-                    rewrite_state(out.marked_docs, self.docs_path)
+            out = submit_and_persist(
+                self.spark,
+                jsonl_path,
+                fields["output_schema_json"].decode(),
+                self.docs_path,
+                self.jobs_path,
+                DirectoryRemote(self.remote_root),
+                f"job-{uuid.uuid4().hex[:12]}",
+                self.now_fn(),
+                collection_name=fields["collection_name"].decode(),
+                mongodb_uri=fields["mongodb_uri"].decode(),
+            )
         finally:
-            # a long-running server must not keep one cached upload
-            # per request
-            if out is not None:
-                out.upload.unpersist()
             os.unlink(jsonl_path)
         if out.errors:
             self._reply(400, out.error_body())

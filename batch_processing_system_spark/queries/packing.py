@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..engine.det import pinned_range_prefix
 from ..engine.io import load_table
 from . import register
 
@@ -616,28 +617,19 @@ _NEG_PARTS = 16
 )
 def r53_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    parts = (
-        docs.repartitionByRange(_NEG_PARTS, "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        # eager: pid feeds the offsets collect and the final plan (r12 rule)
-        .localCheckpoint(eager=True)
+    parts = pinned_range_prefix(
+        docs, _NEG_PARTS, ["doc_id"], {"c": F.count(F.lit(1))}
     )
-    # bounded-collect: one row per range partition
-    per = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    off = 0
-    offsets = []
-    for r in sorted(per, key=lambda r: r["pid"]):
-        offsets.append((int(r["pid"]), off))
-        off += int(r["c"])
-    n = off
-    off_df = spark.createDataFrame(offsets, "pid int, off bigint")
     w = Window.partitionBy("pid").orderBy("doc_id")
-    ranked = parts.join(F.broadcast(off_df), "pid").select(
-        "doc_id", (F.row_number().over(w) + F.col("off") - 1).alias("rnk")
+    ranked = parts.select(
+        "doc_id",
+        (F.row_number().over(w) + F.col("c_before") - 1).alias("rnk"),
+        F.col("c_total").alias("n"),
     )
     cand = ranked.select(
         "doc_id",
         "rnk",
+        "n",
         F.explode(F.array(*[F.lit(k) for k in range(NEG_K)])).alias("k"),
     )
     digest = F.md5(
@@ -648,6 +640,7 @@ def r53_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("k").cast("string"),
         )
     )
+    n = F.col("n")
     draw = F.conv(F.substring(digest, 1, 8), 16, 10).cast("long") % (n - 1)
     paired = cand.select(
         "doc_id",

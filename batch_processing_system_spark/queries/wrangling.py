@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..engine.det import dsum, epoch_us
+from ..engine.det import dsum, epoch_us, pinned_range_prefix
 from ..engine.io import load_table
 from . import register
 
@@ -651,47 +651,28 @@ def r12_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("event_type") == "purchase").cast("int").alias("is1"),
         )
     )
-    parts = (
-        e.repartitionByRange(_KS_PARTS, "value")
-        .withColumn("pid", F.spark_partition_id())
-        # eager: pid feeds TWO jobs (the offsets collect and the final
-        # plan); without materialization, AQE partition coalescing or a
-        # re-sampled range exchange could renumber partitions between
-        # them and silently corrupt every downstream rank
-        .localCheckpoint(eager=True)
-    )
-    per_part = (
-        parts.groupBy("pid")
-        .agg(F.sum("is1").alias("s1"), F.sum(1 - F.col("is1")).alias("s2"))
-        .orderBy("pid")
-    )
-    # bounded-collect: one row per range partition (= _KS_PARTS), never rows
-    rows = per_part.collect()
-    off1 = off2 = 0
-    offsets = []
-    n1 = n2 = 0
-    for r in rows:
-        offsets.append((int(r["pid"]), off1, off2))
-        off1 += int(r["s1"])
-        off2 += int(r["s2"])
-    n1, n2 = off1, off2
-    off_df = spark.createDataFrame(
-        offsets, "pid int, off1 bigint, off2 bigint"
+    parts = pinned_range_prefix(
+        e,
+        _KS_PARTS,
+        ["value"],
+        {"s1": F.sum("is1"), "s2": F.sum(1 - F.col("is1"))},
     )
     w = Window.partitionBy("pid").orderBy("value")
-    cum = (
-        parts.join(F.broadcast(off_df), "pid")
-        .select(
-            (F.sum("is1").over(w) + F.col("off1")).alias("c1"),
-            (F.sum(1 - F.col("is1")).over(w) + F.col("off2")).alias("c2"),
-        )
+    cum = parts.select(
+        (F.sum("is1").over(w) + F.col("s1_before")).alias("c1"),
+        (F.sum(1 - F.col("is1")).over(w) + F.col("s2_before")).alias("c2"),
+        F.col("s1_total").alias("n1"),
+        F.col("s2_total").alias("n2"),
     )
-    d_num = F.max(F.abs(F.col("c1") * F.lit(n2) - F.col("c2") * F.lit(n1)))
+    # no rows means no totals: the sample sizes are then 0
+    n1 = F.coalesce(F.max("n1"), F.lit(0))
+    n2 = F.coalesce(F.max("n2"), F.lit(0))
+    d_num = F.max(F.abs(F.col("c1") * F.col("n2") - F.col("c2") * F.col("n1")))
     return cum.agg(
-        F.lit(n1).cast("bigint").alias("n1"),
-        F.lit(n2).cast("bigint").alias("n2"),
+        n1.cast("bigint").alias("n1"),
+        n2.cast("bigint").alias("n2"),
         d_num.cast("bigint").alias("d_num"),
-        F.round(d_num.cast("double") / F.lit(float(n1 * n2)), 6)
+        F.round(d_num.cast("double") / (n1 * n2).cast("double"), 6)
         .cast("double")
         .alias("ks_d"),
     )
@@ -753,33 +734,15 @@ def r13_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("event_type") == "purchase").cast("int").alias("is1"),
         )
     )
-    parts = (
-        e.repartitionByRange(_KS_PARTS, "value")
-        .withColumn("pid", F.spark_partition_id())
-        # eager: pid feeds TWO jobs (the offsets collect and the final
-        # plan); without materialization, AQE partition coalescing or a
-        # re-sampled range exchange could renumber partitions between
-        # them and silently corrupt every downstream rank
-        .localCheckpoint(eager=True)
+    parts = pinned_range_prefix(
+        e, _KS_PARTS, ["value"], {"c": F.count(F.lit(1))}
     )
-    per_part = (
-        parts.groupBy("pid").agg(F.count(F.lit(1)).alias("c")).orderBy("pid")
-    )
-    # bounded-collect: one row per range partition (= _KS_PARTS), never rows
-    rows = per_part.collect()
-    off = 0
-    offsets = []
-    for r in rows:
-        offsets.append((int(r["pid"]), off))
-        off += int(r["c"])
-    off_df = spark.createDataFrame(offsets, "pid int, off bigint")
     w_le = Window.partitionBy("pid").orderBy("value")  # RANGE: ties included
     w_eq = Window.partitionBy("value")  # ties co-located by range partitioner
     ranked = (
-        parts.join(F.broadcast(off_df), "pid")
-        .select(
+        parts.select(
             "is1",
-            (F.count(F.lit(1)).over(w_le) + F.col("off")).alias("c_le"),
+            (F.count(F.lit(1)).over(w_le) + F.col("c_before")).alias("c_le"),
             F.count(F.lit(1)).over(w_eq).alias("c_eq"),
         )
         # doubled midrank: 2*c_lt + c_eq + 1 = 2*c_le - c_eq + 1
@@ -1546,9 +1509,10 @@ def r24_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     "live). Shape: group to (price, max_size) — corpus-sized shuffle "
     "one — then the sorted cummax sweep runs DISTRIBUTED in the r12 "
     "ECDF discipline: repartitionByRange on price, per-partition "
-    "rowsBetween cummax windows, partition-count-sized collect of "
-    "per-partition maxes broadcast back as prefix offsets — never a "
-    "single-partition global window. Survivor (price, size) pairs "
+    "rowsBetween cummax windows, plus the running max of earlier "
+    "partitions' maxes (a window over the partition-count-sized "
+    "aggregate, broadcast back) — never a single-partition global "
+    "window, nothing collected to the driver. Survivor (price, size) pairs "
     "are frontier-sized (monotone staircase), broadcast for the "
     "join back to full rows. Price is compared, never computed on, "
     "so double equality is exact. At 100 TB: two shuffles total, "
@@ -1559,33 +1523,18 @@ def r26_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = part.groupBy(F.col("p_retailprice").alias("pr")).agg(
         F.max("p_size").alias("ms")
     )
-    parts = (
-        g.repartitionByRange(_KS_PARTS, "pr")
-        .withColumn("pid", F.spark_partition_id())
-        # eager for the same reason as r12: pid must mean the same
-        # partition in the bounded collect and in the final plan
-        .localCheckpoint(eager=True)
+    parts = pinned_range_prefix(
+        g, _KS_PARTS, ["pr"], {"pm": F.max("ms")}, running=F.max
     )
-    per_part = (
-        parts.groupBy("pid").agg(F.max("ms").alias("pm")).orderBy("pid")
-    )
-    running = None
-    prefix_rows = []
-    # bounded-collect: one row per range partition
-    for r in per_part.collect():
-        prefix_rows.append((int(r["pid"]), running))
-        running = max(running, int(r["pm"])) if running is not None else int(r["pm"])
-    off_df = spark.createDataFrame(prefix_rows, "pid int, prefix int")
     w = Window.partitionBy("pid").orderBy("pr").rowsBetween(
         Window.unboundedPreceding, -1
     )
     sky = (
-        parts.join(F.broadcast(off_df), "pid")
-        .withColumn(
+        parts.withColumn(
             "prev",
             F.greatest(
                 F.coalesce(F.max("ms").over(w), F.lit(-1)),
-                F.coalesce(F.col("prefix"), F.lit(-1)),
+                F.coalesce(F.col("pm_before"), F.lit(-1)),
             ),
         )
         .where(F.col("ms") > F.col("prev"))
@@ -1912,44 +1861,19 @@ def r46_equidepth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = events.where(F.col("value").isNotNull()).select(
         "event_type", "value", "event_id"
     )
-    parts = (
-        e.repartitionByRange(_EDB_PARTS, "event_type", "value", "event_id")
-        .withColumn("pid", F.spark_partition_id())
-        # eager: the offsets collect and the ranked plan MUST see the
-        # same pid numbering — AQE coalescing of the range exchange
-        # between the two jobs renumbers partitions otherwise (caught
-        # live at sf0.01: 53 buckets instead of 50)
-        .localCheckpoint(eager=True)
-    )
-    per = (
-        parts.groupBy("pid", "event_type")
-        .agg(F.count(F.lit(1)).alias("c"))
-        # bounded-collect: one row per (range partition, event type) —
-        # partitions × |type| rows, independent of corpus size
-        .collect()
-    )
-    totals: dict[str, int] = {}
-    offsets = []
-    for r in sorted(per, key=lambda r: (r["event_type"], r["pid"])):
-        t = r["event_type"]
-        offsets.append((int(r["pid"]), t, totals.get(t, 0)))
-        totals[t] = totals.get(t, 0) + int(r["c"])
-    off_df = spark.createDataFrame(
-        offsets, "pid int, event_type string, off bigint"
-    )
-    tot_df = spark.createDataFrame(
-        list(totals.items()), "event_type string, n bigint"
+    parts = pinned_range_prefix(
+        e,
+        _EDB_PARTS,
+        ["event_type", "value", "event_id"],
+        {"c": F.count(F.lit(1))},
+        by=("event_type",),
     )
     w = Window.partitionBy("pid", "event_type").orderBy("value", "event_id")
-    ranked = (
-        parts.join(F.broadcast(off_df), ["pid", "event_type"])
-        .join(F.broadcast(tot_df), "event_type")
-        .select(
-            "event_type",
-            "value",
-            (F.row_number().over(w) + F.col("off")).alias("rnk"),
-            "n",
-        )
+    ranked = parts.select(
+        "event_type",
+        "value",
+        (F.row_number().over(w) + F.col("c_before")).alias("rnk"),
+        F.col("c_total").alias("n"),
     )
     bucket = F.expr(f"(rnk - 1) * {_EDB_K} div n").cast("int").alias("bucket")
     return (
@@ -2076,23 +2000,10 @@ _SN_MAXDIST = 3  # Levenshtein acceptance threshold
 def r49_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     names = part.select("p_name").distinct()
-    parts = (
-        names.repartitionByRange(8, "p_name")
-        .withColumn("pid", F.spark_partition_id())
-        # eager: pid feeds the offsets collect and the final plan (r12 rule)
-        .localCheckpoint(eager=True)
-    )
-    # bounded-collect: one row per range partition
-    per = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    off = 0
-    offsets = []
-    for r in sorted(per, key=lambda r: r["pid"]):
-        offsets.append((int(r["pid"]), off))
-        off += int(r["c"])
-    off_df = spark.createDataFrame(offsets, "pid int, off bigint")
+    parts = pinned_range_prefix(names, 8, ["p_name"], {"c": F.count(F.lit(1))})
     w = Window.partitionBy("pid").orderBy("p_name")
-    ranked = parts.join(F.broadcast(off_df), "pid").select(
-        "p_name", (F.row_number().over(w) + F.col("off")).alias("rnk")
+    ranked = parts.select(
+        "p_name", (F.row_number().over(w) + F.col("c_before")).alias("rnk")
     )
     lhs = ranked.select(
         F.col("p_name").alias("name_a"),
@@ -2306,30 +2217,19 @@ def r66_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)  # three rank passes below
 
     def _rank(df: DataFrame, order_cols, alias: str) -> DataFrame:
-        """Global dense row_number over a total order via the
-        pinned-pid distributed ECDF (r12/r46 discipline)."""
-        parts = (
-            df.repartitionByRange(16, *order_cols, "user_id")
-            .withColumn("pid", F.spark_partition_id())
-            # eager: pid feeds the offsets collect and the final plan
-            .localCheckpoint(eager=True)
+        """Global dense row_number over a total order (engine.det
+        pinned_range_prefix)."""
+        parts = pinned_range_prefix(
+            df, 16, [*order_cols, "user_id"], {"c": F.count(F.lit(1))}
         )
-        # bounded-collect: one row per range partition
-        per = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("c")).collect()
-        off = 0
-        offs = []
-        for r in sorted(per, key=lambda r: r["pid"]):
-            offs.append((int(r["pid"]), off))
-            off += int(r["c"])
-        off_df = df.sparkSession.createDataFrame(offs, "pid int, off bigint")
         w = Window.partitionBy("pid").orderBy(*order_cols, "user_id")
-        return parts.join(F.broadcast(off_df), "pid").select(
-            "user_id", (F.row_number().over(w) + F.col("off")).alias(alias)
+        return parts.select(
+            "user_id", (F.row_number().over(w) + F.col("c_before")).alias(alias)
         )
 
     # the three rank passes are independent jobs over the same
     # checkpointed input — submit them from a small thread pool so each
-    # pass's materialize+collect tail backfills the others (guide §2.6;
+    # pass's eager range checkpoint backfills the others (guide §2.6;
     # results are deterministic per pass, only the wall-clock overlaps)
     from concurrent.futures import ThreadPoolExecutor
 

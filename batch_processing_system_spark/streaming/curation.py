@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..engine.io import local_frame
+from ..pipeline.statestore import read_bid_store, write_bid_store
 from ..queries.similarity import _band_self_join, _shingles, _verify_jaccard_pairs
 from .neardup import BAND_SCHEMA, _band_cross_join, _band_table
 
@@ -76,28 +77,6 @@ ACCEPTED_SCHEMA = T.StructType(
 )
 
 
-def _read_store(
-    spark: SparkSession, path: str, schema, current_bid: int
-) -> DataFrame:
-    """Read a bid-partitioned state store, excluding the current
-    batch's own partition (a crashed earlier attempt of THIS batch may
-    have left partial rows there — they are not earlier arrivals)."""
-    cols = [f.name for f in schema.fields]
-    if not os.path.exists(path):
-        return local_frame(spark, [], schema)
-    try:
-        df = spark.read.parquet(path)
-    except Exception:  # dir exists but holds no committed footers yet
-        return local_frame(spark, [], schema)
-    return df.where(F.col("bid") != current_bid).select(*cols)
-
-
-def _write_store(df: DataFrame, path: str, current_bid: int) -> None:
-    """Overwrite the store partition keyed by this batch id — replay
-    rewrites identical content instead of duplicating appends."""
-    df.write.mode("overwrite").parquet(os.path.join(path, f"bid={current_bid}"))
-
-
 def curation_batch(
     spark: SparkSession, batch: DataFrame, state_dir: str, batch_id: int = 0
 ) -> DataFrame:
@@ -125,13 +104,13 @@ def curation_batch(
 
     # --- near-dup b-side rule vs EVERY earlier doc -------------------
     bands = _band_table(batch).localCheckpoint(eager=True)
-    store_bands = _read_store(spark, bands_path, BAND_SCHEMA, batch_id)
+    store_bands = read_bid_store(spark, bands_path, BAND_SCHEMA, batch_id)
     cand = (
         _band_cross_join(bands, store_bands)
         .unionAll(_band_self_join(bands))
         .distinct()
     )
-    store_docs = _read_store(spark, docs_path, _DOC_SCHEMA, batch_id)
+    store_docs = read_bid_store(spark, docs_path, _DOC_SCHEMA, batch_id)
     involved_old = store_docs.join(
         cand.select(F.col("da").alias("doc_id")).distinct(),
         "doc_id",
@@ -151,7 +130,7 @@ def curation_batch(
         (F.col("n_tokens") >= 10)
         & (F.col("n_uniq") * 10 >= F.col("n_tokens") * 3)
     )
-    digest_store = _read_store(spark, digests_path, _DIGEST_SCHEMA, batch_id)
+    digest_store = read_bid_store(spark, digests_path, _DIGEST_SCHEMA, batch_id)
     first_in_batch = (
         quality.groupBy("h")
         .agg(F.min("doc_id").alias("keep_id"))
@@ -182,9 +161,9 @@ def curation_batch(
     # --- store writes, keyed by batch id (EVERY doc indexes; quality
     # digests only); overwrite-per-bid makes replay a rewrite, not a
     # duplicate append ------------------------------------------------
-    _write_store(batch.select("doc_id", "text"), docs_path, batch_id)
-    _write_store(bands.select("band", "h", "doc_id"), bands_path, batch_id)
-    _write_store(quality.select("h").distinct(), digests_path, batch_id)
+    write_bid_store(batch.select("doc_id", "text"), docs_path, batch_id)
+    write_bid_store(bands.select("band", "h", "doc_id"), bands_path, batch_id)
+    write_bid_store(quality.select("h").distinct(), digests_path, batch_id)
     return accepted
 
 
@@ -204,9 +183,7 @@ def run_curation_stream(
         )
         # output is keyed by bid too: replay overwrites its own
         # partition instead of appending duplicates
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"bid={bid}")
-        )
+        write_bid_store(accepted, out_path, bid)
 
     return (
         src.writeStream.foreachBatch(sink)

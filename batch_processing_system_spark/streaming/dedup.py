@@ -12,6 +12,11 @@ documents (SCALE.md, exact-dedup row).
 
 Within-batch ties keep the minimum doc_id (deterministic, §2.5 D3);
 cross-batch arrivals lose to whatever the store already holds.
+
+foreachBatch is at-least-once: both writes (digests, corpus) overwrite
+the micro-batch's ``bid=<N>`` partition and the digest read skips it,
+so a batch replayed after a crash between them re-admits its survivors
+(the ``streaming/curation.py`` contract).
 """
 
 from __future__ import annotations
@@ -20,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..pipeline.statestore import read_state
+from ..pipeline.statestore import read_bid_store, write_bid_store
 
 INCOMING_DOC_SCHEMA = T.StructType(
     [
@@ -38,26 +43,27 @@ DIGEST_SCHEMA = T.StructType(
 
 
 def dedup_batch(
-    spark: SparkSession, batch: DataFrame, digest_path: str
+    spark: SparkSession, batch: DataFrame, digest_path: str, batch_id: int
 ) -> DataFrame:
     """One micro-batch of exact dedup against the persistent digest
     store: hash, drop within-batch copies (min doc_id survives), then
-    anti-join the store. Returns the surviving (doc_id, text,
-    text_hash) rows and appends their digests to the store."""
+    anti-join the digests of earlier batches. Returns the surviving
+    (doc_id, text, text_hash) rows and writes their digests as the
+    store's ``bid=<batch_id>`` partition."""
     hashed = batch.withColumn("text_hash", F.md5(F.encode("text", "UTF-8")))
     w_min = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("doc_id"))
     batch_unique = hashed.join(w_min, ["text_hash", "doc_id"])
-    seen = read_state(spark, digest_path, DIGEST_SCHEMA)
+    seen = read_bid_store(spark, digest_path, DIGEST_SCHEMA, batch_id)
     survivors = batch_unique.join(
         seen.select("text_hash"), "text_hash", "left_anti"
     ).select("doc_id", "text", "text_hash")
-    # Materialize before the store append so the anti-join cannot see
+    # Materialize before the store write so the anti-join cannot see
     # its own batch's digests mid-write.
     survivors = survivors.localCheckpoint(eager=True)
-    (
-        survivors.select("text_hash", F.col("doc_id").alias("keep_id"))
-        .write.mode("append")
-        .parquet(digest_path)
+    write_bid_store(
+        survivors.select("text_hash", F.col("doc_id").alias("keep_id")),
+        digest_path,
+        batch_id,
     )
     return survivors
 
@@ -78,8 +84,10 @@ def stream_dedup_documents(
     incoming = spark.readStream.schema(INCOMING_DOC_SCHEMA).json(incoming_dir)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        survivors = dedup_batch(batch_df.sparkSession, batch_df, digest_path)
-        survivors.select("doc_id", "text").write.mode("append").parquet(corpus_path)
+        survivors = dedup_batch(
+            batch_df.sparkSession, batch_df, digest_path, batch_id
+        )
+        write_bid_store(survivors.select("doc_id", "text"), corpus_path, batch_id)
 
     return incoming.writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint

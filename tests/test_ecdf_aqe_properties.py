@@ -5,7 +5,10 @@ pattern (repartitionByRange → spark_partition_id → per-partition
 window + broadcast prefix offsets) silently corrupts every downstream
 rank if AQE partition coalescing or a re-sampled range exchange
 renumbers partitions between the offsets job and the final plan —
-the fix pins the partitioning with an eager localCheckpoint.
+the fix pins the partitioning with an eager localCheckpoint. That
+pattern and its pin now live in one helper,
+``engine.det.pinned_range_prefix``, which every family member below
+except r70 calls.
 
 This module is the property harness the fix deserves: every family
 member (r12 KS, r13 Mann-Whitney, r26 skyline, r46 equi-depth bins,

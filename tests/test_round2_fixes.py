@@ -1,6 +1,7 @@
 """Round-2 hardening tests: hashable q22 projection, q46 hot-shingle
-DF cut recall, q54 bounded-collect + LSH fallback equivalence, and the
-no-unbounded-collect lint over the query catalog."""
+DF cut recall, q54 bounded-collect + over-budget (blocked all-pairs)
+fallback equivalence, and the no-unbounded-collect lint over the query
+catalog."""
 
 from __future__ import annotations
 
@@ -131,9 +132,10 @@ class TestQ46HotShingleCut:
 
 class TestQ54BoundedCollect:
     def test_lsh_fallback_same_pairs(self, spark):
-        """A 1-byte budget forces the LSH path; at this data scale the
-        candidate buckets recover every exact pair (verification is
-        exact, so no extras are possible either)."""
+        """A 1-byte budget forces the over-budget route,
+        ``_cosine_pairs_blocked`` (the test id keeps its old LSH name);
+        the blocked all-pairs grid is exact, so it returns the same
+        pairs as the broadcast path."""
         exact = {(r[0], r[1], r[2]) for r in q54_cosine_neardup(spark, SF_SMALL).collect()}
         lsh_df = q54_cosine_neardup(spark, SF_SMALL, broadcast_budget_bytes=1)
         lsh = {(r[0], r[1], r[2]) for r in lsh_df.collect()}
@@ -142,6 +144,8 @@ class TestQ54BoundedCollect:
         assert len(exact) > 0
 
     def test_lsh_fallback_avoids_python_stage(self, spark):
+        """The 1-byte budget's ``_cosine_pairs_blocked`` route plans no
+        mapInPandas stage (its grid cells run through applyInPandas)."""
         plan = q54_cosine_neardup(
             spark, SF_SMALL, broadcast_budget_bytes=1
         )._jdf.queryExecution().toString()

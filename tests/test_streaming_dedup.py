@@ -7,11 +7,24 @@ from __future__ import annotations
 
 import json
 
+import pytest
+from pyspark.errors import StreamingQueryException
+
 from batch_processing_system_spark.streaming.dedup import stream_dedup_documents
 
 
 def doc_line(doc_id, text):
     return json.dumps({"doc_id": doc_id, "text": text})
+
+
+WAVE1 = "".join(
+    doc_line(i, t) + "\n"
+    for i, t in [
+        (3, "the quick brown fox"),
+        (1, "the quick brown fox"),
+        (2, "a completely different text"),
+    ]
+)
 
 
 class TestStreamingDedup:
@@ -34,16 +47,7 @@ class TestStreamingDedup:
         incoming.mkdir()
 
         # wave 1: one within-batch duplicate pair (min doc_id wins)
-        (incoming / "w1.jsonl").write_text(
-            "\n".join(
-                [
-                    doc_line(3, "the quick brown fox"),
-                    doc_line(1, "the quick brown fox"),
-                    doc_line(2, "a completely different text"),
-                ]
-            )
-            + "\n"
-        )
+        (incoming / "w1.jsonl").write_text(WAVE1)
         self._run(spark, incoming, tmp_path)
         corpus = {
             r["doc_id"]: r["text"]
@@ -77,3 +81,29 @@ class TestStreamingDedup:
         digests = spark.read.parquet(str(tmp_path / "digests"))
         assert digests.count() == 3  # one digest per surviving doc
         assert digests.select("text_hash").distinct().count() == 3
+
+    def test_replay_after_failed_corpus_write_keeps_survivors(
+        self, spark, tmp_path
+    ):
+        """foreachBatch is at-least-once: a batch whose digests landed
+        but whose corpus write failed is replayed on restart, and the
+        replay must still admit its survivors (its own digests are not
+        earlier arrivals)."""
+        incoming = tmp_path / "incoming"
+        incoming.mkdir()
+        (incoming / "w1.jsonl").write_text(WAVE1)
+        # a plain file where the corpus directory goes: the digest
+        # write succeeds, the corpus write fails, the query dies
+        blocker = tmp_path / "corpus"
+        blocker.write_text("not a directory")
+        with pytest.raises(StreamingQueryException):
+            self._run(spark, incoming, tmp_path)
+        blocker.unlink()
+
+        self._run(spark, incoming, tmp_path)
+        corpus = {
+            r["doc_id"]: r["text"]
+            for r in spark.read.parquet(str(tmp_path / "corpus")).collect()
+        }
+        assert corpus == {1: "the quick brown fox", 2: "a completely different text"}
+        assert spark.read.parquet(str(tmp_path / "digests")).count() == 2
