@@ -641,7 +641,9 @@ def r53_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     n = F.col("n")
-    draw = F.conv(F.substring(digest, 1, 8), 16, 10).cast("long") % (n - 1)
+    # a one-document corpus has no partner: `% 0` is NULL and the
+    # partner join drops the row, as in the oracle (ANSI `%` would raise)
+    draw = F.try_mod(F.conv(F.substring(digest, 1, 8), 16, 10).cast("long"), n - 1)
     paired = cand.select(
         "doc_id",
         F.col("k").cast("int").alias("neg_idx"),

@@ -4,10 +4,10 @@ The streaming twins (scd2, journeys, curation, neardup, heavyhitters)
 were pytest-verified but invisible to the catalog/bench surface; this
 module puts one genuinely-streaming execution INTO the driver's
 correctness gate: the q95 funnel automaton replayed through Structured
-Streaming (readStream → applyInPandasWithState → foreachBatch upsert
-store) over the same events table, pinned to the SAME DuckDB oracle as
-the batch q95 — so batch ≡ stream is hash-checked by the gate itself,
-not just by the test suite.
+Streaming (readStream → applyInPandasWithState → foreachBatch into a
+micro-batch-keyed store) over the same events table, pinned to the
+SAME DuckDB oracle as the batch q95 — so batch ≡ stream is
+hash-checked by the gate itself, not just by the test suite.
 
 Replay design (all Spark-side, no driver collect at any size):
 
@@ -18,15 +18,20 @@ Replay design (all Spark-side, no driver collect at any size):
    range order. Exported once per (sf_dir, process): the wire log is
    ingest infrastructure, like the layout twins.
 2. *Replay* — availableNow + maxFilesPerTrigger=1 processes one wave
-   per micro-batch, oldest mtime first (Spark's file-source order), so
+   per micro-batch (small wires fold into one, see ``_replay``),
+   oldest mtime first (Spark's file-source order), so
    a user active across waves has state carried across batches by the
    engine — the cross-batch contract the pytest waves also exercise.
    ANY (es, event_id)-range split yields the batch answer exactly: the
    automaton is a fold over the per-user (es, event_id)-sorted
    sequence, each batch sorts within itself, and range concatenation
    IS the global order (streaming/journeys.py docstring).
-3. *Store* — per-user upsert (read, anti-join, union, swap) per batch;
-   the final store is the q95 output shape.
+3. *Store* — the operator's own run function writes each
+   micro-batch's updates as the store's ``bid=<N>`` partition
+   (``statestore.write_bid_store``, replay-safe); the result is the
+   latest batch's rows per user (``statestore.read_latest``), the q95
+   output shape. Every row here wires its operator the same way
+   (``_replay``).
 
 Provenance: the reference's batch/stream duality requirement
 (/root/reference/README.md:86-110 state machine + :83 polling loop);
@@ -45,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine.io import load_table
+from ..pipeline.statestore import read_bid_store, read_latest, stream_updates
 from . import register
 from .temporal import Q95_SQL
 from .wrangling import R04_SCD2_SQL
@@ -108,13 +114,71 @@ def _stream_shuffle_partitions(spark: SparkSession, n: int):
     so nothing else plans under the lowered value. On a real cluster
     the state partition count is sized to executor count x state
     volume — this helper is the toy-SF analogue of that sizing, not a
-    correctness knob (tests pin upsert ≡ append ≡ batch)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    correctness knob (tests pin stream ≡ batch).
+
+    It also pins spark.sql.streaming.noDataMicroBatches.enabled to
+    true (the engine default) for the window: r80's outer (NULL) rows
+    are emitted only by availableNow's trailing no-data micro-batch,
+    so a session-level override must not drop it. The
+    other rows have no watermark, so they never run such a batch."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def _replay(
+    spark: SparkSession,
+    prefix: str,
+    wire_dirs: list[str],
+    n_files: int,
+    writer,
+    n_parts=None,
+) -> str:
+    """Run one streaming row's replay to completion; returns its store
+    path. Reclaims the previous run dir, makes this one, and starts
+    ``writer(read, store, ckpt)``, where ``read(schema, wire_dir)`` is
+    the wire's parquet stream source.
+
+    Below _SINGLE_BATCH_MAX_WIRE_BYTES all ``n_files`` wire files fold
+    into ONE availableNow micro-batch: each extra micro-batch is pure
+    fixed machinery at toy SF, and the multi-wave contracts stay pinned
+    by the operators' forced multi-batch pytest replays. Above it, one
+    file per micro-batch.
+    ``n_parts(wire_bytes)`` sizes the state partitions (default 8)."""
+    while _LAST_RUN_DIR:
+        shutil.rmtree(_LAST_RUN_DIR.pop(), ignore_errors=True)
+    run_dir = tempfile.mkdtemp(prefix=f"{prefix}_run_")
+    _LAST_RUN_DIR.append(run_dir)
+    store = os.path.join(run_dir, "store")
+    wire_bytes = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d in wire_dirs
+        for f in os.listdir(d)
+        if f.endswith(".parquet")
+    )
+    mft = n_files if wire_bytes <= _SINGLE_BATCH_MAX_WIRE_BYTES else 1
+
+    def read(schema, wire_dir: str) -> DataFrame:
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", mft)
+            .parquet(wire_dir)
+        )
+
+    n = 8 if n_parts is None else n_parts(wire_bytes)
+    with _stream_shuffle_partitions(spark, n):
+        q = writer(read, store, os.path.join(run_dir, "ckpt")).start()
+        q.awaitTermination()
+    return store
 
 
 def _wire_log(spark: SparkSession, sf_dir: str) -> str:
@@ -157,8 +221,9 @@ def _wire_log(spark: SparkSession, sf_dir: str) -> str:
     "of the journeys twin (VERDICT r12 item 6): the events table is "
     "replayed as a 3-wave time-ordered parquet wire log through "
     "readStream → applyInPandasWithState (one micro-batch per wave, "
-    "availableNow) into a per-user upsert store, and the FINAL store "
-    "must hash-match the exact same DuckDB oracle as the batch q95 — "
+    "availableNow) into a micro-batch-keyed store read latest-wins per "
+    "user, and the FINAL view must hash-match the exact same DuckDB "
+    "oracle as the batch q95 — "
     "batch ≡ stream checked by the driver gate itself. Cross-batch "
     "state is real: users active in several waves have their "
     "(stage, t1, t2, t3) carried across micro-batches by the engine's "
@@ -168,47 +233,25 @@ def _wire_log(spark: SparkSession, sf_dir: str) -> str:
     "processed in range order, so the concatenation the state machine "
     "sees IS the globally sorted sequence. At 100 TB: the wire export "
     "is the ingest log itself (written once), state is RocksDB-backed "
-    "O(#users x O(1)), and the store upsert becomes a MERGE into the "
-    "serving table — the exact §3 polling-pipeline shape. Tier-1.",
+    "O(#users x O(1)), and the latest-wins store becomes a MERGE into "
+    "the serving table — the exact §3 polling-pipeline shape. Tier-1.",
 )
 def r77_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The returned DataFrame is eagerly localCheckpoint-ed (ADVICE
-    r14), so it stays readable even after the next streaming-row call
-    reclaims this invocation's run dir."""
-    from ..streaming.journeys import latest_per_key, run_funnel_stream_parquet
+    r14): the resolved store is user-count-sized, and checkpointing it
+    detaches the result from the run dir the next streaming-row call
+    reclaims."""
+    from ..streaming.journeys import EVENT_WIRE_SCHEMA, FUNNEL_SCHEMA, run_funnel_stream
 
     wire_dir = _wire_log(spark, sf_dir)
-    while _LAST_RUN_DIR:
-        shutil.rmtree(_LAST_RUN_DIR.pop(), ignore_errors=True)
-    run_dir = tempfile.mkdtemp(prefix="r77_run_")
-    _LAST_RUN_DIR.append(run_dir)
-    store = os.path.join(run_dir, "store")
-    ckpt = os.path.join(run_dir, "ckpt")
-    # append-log store + 8 state partitions (VERDICT r13 item 3): one
-    # batch-sized append per wave instead of a store rewrite, and a
-    # quarter of the per-batch state-store commits; small wire logs
-    # additionally fold into a single availableNow batch (see
-    # _SINGLE_BATCH_MAX_WIRE_BYTES)
-    wire_bytes = sum(
-        os.path.getsize(os.path.join(wire_dir, f))
-        for f in os.listdir(wire_dir)
-        if f.endswith(".parquet")
+    store = _replay(
+        spark, "r77", [wire_dir], _N_WAVES,
+        lambda read, store, ckpt: run_funnel_stream(
+            read(EVENT_WIRE_SCHEMA, wire_dir), store, ckpt
+        ),
     )
-    mft = _N_WAVES if wire_bytes <= _SINGLE_BATCH_MAX_WIRE_BYTES else 1
-    with _stream_shuffle_partitions(spark, 8):
-        q = run_funnel_stream_parquet(
-            spark, wire_dir, store, ckpt,
-            max_files_per_trigger=mft, store_mode="append",
-        ).start()
-        q.awaitTermination()
-    # eager materialization (ADVICE r14): the resolved store is
-    # user-count-sized; checkpointing it detaches the returned
-    # DataFrame from the run dir reclaimed by the next streaming-row
-    # invocation
-    return (
-        latest_per_key(spark.read.parquet(store))
-        .select("user_id", "stage", "t1", "t2", "t3")
-        .localCheckpoint(eager=True)
+    return read_latest(spark, store, FUNNEL_SCHEMA, ["user_id"]).localCheckpoint(
+        eager=True
     )
 
 
@@ -301,9 +344,10 @@ LEFT JOIN kept_ids k ON k.doc_id = d.doc_id
     "driver gate (VERDICT r13 item 2 — the X2c twin promoted from "
     "pytest-only to catalog row, following the r77 wire-log pattern): "
     "documents are replayed as an _N_DOC_WAVES-file doc_id-ordered parquet "
-    "wire log through readStream → foreachBatch(neardup_batch) — "
+    "wire log through readStream → foreachBatch(neardup_sink) — "
     "MinHash band store + kept-corpus store as the cross-batch dedup "
-    "memory (streaming/neardup.py) — and the accumulated decision log "
+    "memory, each a micro-batch-keyed log (streaming/neardup.py) — "
+    "and the accumulated decision log "
     "(doc_id, kept, dup_of) must hash-match a DuckDB oracle of the "
     "GREEDY-over-exact-pairs semantics: first arrival wins, a doc is "
     "kept iff no already-kept verified (exact Jaccard ≥ 0.6) neighbor "
@@ -328,80 +372,31 @@ def r78_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The returned DataFrame is eagerly localCheckpoint-ed (ADVICE
     r14), so it stays readable even after the next streaming-row call
     reclaims this invocation's run dir."""
-    from ..streaming.neardup import INCOMING_DOC_SCHEMA, neardup_batch
+    from ..streaming.neardup import DECISION_SCHEMA, INCOMING_DOC_SCHEMA, neardup_sink
 
     wire_dir = _doc_wire_log(spark, sf_dir)
-    while _LAST_RUN_DIR:
-        shutil.rmtree(_LAST_RUN_DIR.pop(), ignore_errors=True)
-    run_dir = tempfile.mkdtemp(prefix="r78_run_")
-    _LAST_RUN_DIR.append(run_dir)
-    corpus = os.path.join(run_dir, "corpus")
-    bands = os.path.join(run_dir, "bands")
-    decisions = os.path.join(run_dir, "decisions")
-    ckpt = os.path.join(run_dir, "ckpt")
 
-    # Round-17 (guide §1.2 — don't recompute what you already hold):
-    # the per-batch decision tables are ALREADY eagerly
-    # localCheckpoint-ed by neardup_batch (session-lifetime blocks,
-    # independent of the reclaimable run dir), so capture them here
-    # and return their union instead of re-reading the decision log
-    # parquet back — two fewer jobs (read + re-checkpoint) per query.
-    # The decision log itself is still written: it IS the operator's
-    # externalized output contract.
-    batch_decisions: list[DataFrame] = []
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        d = neardup_batch(batch_df.sparkSession, batch_df, corpus, bands)
-        d.write.mode("append").parquet(decisions)
-        batch_decisions.append(d)
-
-    # single-batch fold below the wire threshold (VERDICT r14 item 1,
-    # the r77 treatment): each extra micro-batch here costs ~3-4 s of
-    # candidate/verify machinery at toy SF. Correctness is unchanged —
-    # the within-batch resolution IS the global greedy walk when the
-    # whole doc_id-ordered wire arrives as one batch — and the
-    # cross-batch band-store contract stays pinned by the forced
-    # multi-wave pytest replay (tests/test_streaming_neardup.py). At
-    # production SF the wire blows past the threshold and the replay is
-    # genuinely multi-batch.
-    wire_bytes = sum(
-        os.path.getsize(os.path.join(wire_dir, f))
-        for f in os.listdir(wire_dir)
-        if f.endswith(".parquet")
-    )
-    mft = (
-        _N_DOC_WAVES
-        if wire_bytes <= _SINGLE_BATCH_MAX_WIRE_BYTES
-        else 1
-    )
-    src = (
-        spark.readStream.schema(INCOMING_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", mft)
-        .parquet(wire_dir)
-    )
-    # 8 shuffle partitions, same rationale as r77 (measured: per-batch
-    # cost here is plan-compilation/job-launch bound — 4/8/16/32 all
-    # within noise — so match the streaming-row house default)
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            src.writeStream.foreachBatch(_sink)
+    def writer(read, store, ckpt):
+        sink = neardup_sink(
+            os.path.join(store, "corpus"),
+            os.path.join(store, "bands"),
+            os.path.join(store, "decisions"),
+        )
+        return (
+            read(INCOMING_DOC_SCHEMA, wire_dir)
+            .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-    # the captured per-batch tables are each eagerly checkpointed
-    # (detached from the run dir — the ADVICE r14 contract holds);
-    # their union is the same decision log the parquet read-back
-    # produced, without the extra read + re-checkpoint jobs
-    if not batch_decisions:  # defensive: empty wire
-        return spark.read.parquet(decisions).select(
-            "doc_id", "kept", "dup_of"
-        ).localCheckpoint(eager=True)
-    out = batch_decisions[0].select("doc_id", "kept", "dup_of")
-    for d in batch_decisions[1:]:
-        out = out.unionByName(d.select("doc_id", "kept", "dup_of"))
-    return out
+
+    # the within-batch resolution IS the global greedy walk when the
+    # whole doc_id-ordered wire arrives as one batch (the single-batch
+    # fold); the cross-batch band-store contract is pinned by
+    # tests/test_streaming_neardup.py's multi-wave replay
+    store = _replay(spark, "r78", [wire_dir], _N_DOC_WAVES, writer)
+    return read_bid_store(
+        spark, os.path.join(store, "decisions"), DECISION_SCHEMA
+    ).localCheckpoint(eager=True)
 
 
 #: r79 oracle — only DETERMINISTIC sketch facts are hash-checked (the
@@ -455,52 +450,28 @@ def r79_streaming_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The returned DataFrame is eagerly localCheckpoint-ed (ADVICE
     r14), so it stays readable even after the next streaming-row call
     reclaims this invocation's run dir."""
-    from ..streaming.heavyhitters import DEFAULT_K, heavy_hitters_faceted
+    from ..streaming.heavyhitters import (
+        DEFAULT_K,
+        FACET_SKETCH_SCHEMA,
+        heavy_hitters_faceted,
+    )
     from ..streaming.journeys import EVENT_WIRE_SCHEMA
 
     k = DEFAULT_K
     wire_dir = _wire_log(spark, sf_dir)
-    while _LAST_RUN_DIR:
-        shutil.rmtree(_LAST_RUN_DIR.pop(), ignore_errors=True)
-    run_dir = tempfile.mkdtemp(prefix="r79_run_")
-    _LAST_RUN_DIR.append(run_dir)
-    store = os.path.join(run_dir, "store")
-    ckpt = os.path.join(run_dir, "ckpt")
-
-    # same single-batch fold rule as r77/r78: extra micro-batches are
-    # pure fixed machinery at toy SF; the multi-wave contract is pinned
-    # by the pytest twin
-    wire_bytes = sum(
-        os.path.getsize(os.path.join(wire_dir, f))
-        for f in os.listdir(wire_dir)
-        if f.endswith(".parquet")
+    store = _replay(
+        spark, "r79", [wire_dir], _N_WAVES,
+        lambda read, store, ckpt: stream_updates(
+            heavy_hitters_faceted(
+                read(EVENT_WIRE_SCHEMA, wire_dir),
+                facets={"type": "event_type", "user": "user_id"},
+                k=k,
+            ),
+            store,
+            ckpt,
+        ),
     )
-    mft = _N_WAVES if wire_bytes <= _SINGLE_BATCH_MAX_WIRE_BYTES else 1
-    src = (
-        spark.readStream.schema(EVENT_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", mft)
-        .parquet(wire_dir)
-    )
-    out = heavy_hitters_faceted(
-        src, facets={"type": "event_type", "user": "user_id"}, k=k
-    )
-
-    def _replace(df: DataFrame, _id: int) -> None:
-        snap = df.localCheckpoint(eager=True)
-        if snap.count() > 0:
-            snap.write.mode("overwrite").parquet(store)
-
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.foreachBatch(_replace)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    sketch = spark.read.parquet(store)
+    sketch = read_latest(spark, store, FACET_SKETCH_SCHEMA, ["facet"])
     wire = spark.read.parquet(wire_dir)
     n_total = wire.count()
 
@@ -705,7 +676,8 @@ LEFT JOIN res s
     "the oracle reproduces it), each replayed as event-time-ordered "
     "parquet waves through readStream → withWatermark on BOTH sides → "
     "native stream-stream join on custom_id within [req_ts, req_ts + "
-    f"{_SS_HORIZON} s] (streaming/ssjoin.py) → foreachBatch append. "
+    f"{_SS_HORIZON} s] (streaming/ssjoin.py) → foreachBatch into a "
+    "micro-batch-keyed log. "
     "The accumulated output must hash-match DuckDB's batch left join: "
     "matched rows with latency, expired requests (answered past the "
     "horizon) and never-answered requests exactly once with NULL "
@@ -726,97 +698,43 @@ def r80_streaming_ssjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14), so it stays readable even after the next streaming-row call
     reclaims this invocation's run dir."""
     from ..streaming.ssjoin import (
+        JOINED_SCHEMA,
         REQUEST_WIRE_SCHEMA,
         RESULT_WIRE_SCHEMA,
-        join_requests_results,
+        run_request_result_join_stream,
     )
 
     reqs_dir, ress_dir = _reqres_wire_logs(spark, sf_dir)
-    while _LAST_RUN_DIR:
-        shutil.rmtree(_LAST_RUN_DIR.pop(), ignore_errors=True)
-    run_dir = tempfile.mkdtemp(prefix="r80_run_")
-    _LAST_RUN_DIR.append(run_dir)
-    out = os.path.join(run_dir, "out")
-    ckpt = os.path.join(run_dir, "ckpt")
-
-    # single-batch fold below the wire threshold (round-16 measurement:
-    # each stream-stream micro-batch costs ~3 s of fixed machinery at
-    # toy SF — 4 join state stores per partition, each load+evict+
-    # commit — so fold ALL files, flush included, into batch 0).
-    # Outer-row emission still happens ONLY by watermark eviction: the
-    # availableNow wrapper runs one trailing batch after the last data
-    # batch precisely because the sentinel advanced the watermark with
-    # evictions pending, so the minimum honest replay is 2
-    # micro-batches (all data, then the eviction flush) — measured
-    # checksum-identical to the old 3-batch replay at sf0.1/sf0.01.
-    # Above the threshold each file is its own batch and the flush
-    # file still closes the stream.
-    wire_bytes = sum(
-        os.path.getsize(os.path.join(d, f))
-        for d in (reqs_dir, ress_dir)
-        for f in os.listdir(d)
-        if f.endswith(".parquet")
+    # The single-batch fold takes ALL files, flush included, into
+    # batch 0 (round-16 measurement: each stream-stream micro-batch
+    # costs ~3 s of fixed machinery at toy SF — 4 join state stores per
+    # partition, each load+evict+commit). Outer-row emission still
+    # happens ONLY by watermark eviction: the availableNow wrapper runs
+    # one trailing no-data batch after the last data batch precisely
+    # because the sentinel advanced the watermark with evictions
+    # pending, so the minimum honest replay is 2 micro-batches —
+    # measured checksum-identical to the old 3-batch replay at
+    # sf0.1/sf0.01. Above the threshold each file is its own batch and
+    # the flush file still closes the stream.
+    store = _replay(
+        spark, "r80", [reqs_dir, ress_dir], _SS_N_WAVES + 2,
+        lambda read, store, ckpt: run_request_result_join_stream(
+            read(REQUEST_WIRE_SCHEMA, reqs_dir),
+            read(RESULT_WIRE_SCHEMA, ress_dir),
+            store, ckpt, _SS_HORIZON, _SS_DELAY, how="left_outer",
+        ),
+        # scale-adaptive state partitioning (guide §2: derive from input
+        # size, not a constant): a stream-stream join keeps FOUR state
+        # stores per partition, so its per-partition fixed cost is 4x
+        # the single-store rows' — at toy SF 2 partitions measured 1.7x
+        # faster than the house default 8 with identical output, while
+        # the 32 MB-per-partition rule grows the count linearly with
+        # wire volume (256 MB wire -> 8, 32 GB -> the 200 cap)
+        n_parts=lambda wire_bytes: max(2, min(200, wire_bytes // (32 << 20) + 1)),
     )
-    mft = (
-        _SS_N_WAVES + 2
-        if wire_bytes <= _SINGLE_BATCH_MAX_WIRE_BYTES
-        else 1
-    )
-    req = (
-        spark.readStream.schema(REQUEST_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", mft)
-        .parquet(reqs_dir)
-    )
-    res = (
-        spark.readStream.schema(RESULT_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", mft)
-        .parquet(ress_dir)
-    )
-    joined = join_requests_results(
-        req, res, _SS_HORIZON, _SS_DELAY, how="left_outer"
-    )
-
-    def _sink(batch_df: DataFrame, _bid: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    # Scale-adaptive state partitioning (guide §2: derive from input
-    # size, not a constant): a stream-stream join keeps FOUR state
-    # stores per partition, so its per-partition fixed cost is 4x the
-    # single-store rows' — at toy SF 2 partitions measured 1.7x faster
-    # than the house default 8 with identical output, while the
-    # 32 MB-per-partition rule grows the count linearly with wire
-    # volume (256 MB wire -> 8, 32 GB -> the 200 cap).
-    n_parts = max(2, min(200, wire_bytes // (32 << 20) + 1))
-    # ADVICE r16: with the flush file folded into batch 0, the outer
-    # (NULL) rows are emitted by availableNow's trailing NO-DATA
-    # micro-batch — which only runs while
-    # spark.sql.streaming.noDataMicroBatches.enabled is true (the
-    # engine default). Pin it for this stream so a session-level
-    # override can never silently drop the eviction batch and with it
-    # the Tier-1 NULL outer rows.
-    prev_ndmb = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try:
-        with _stream_shuffle_partitions(spark, n_parts):
-            q = (
-                joined.writeStream.foreachBatch(_sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndmb
-        )
     return (
-        spark.read.parquet(out)
+        read_bid_store(spark, store, JOINED_SCHEMA)
         .filter(~F.col("custom_id").startswith("sentinel"))
-        .select(
-            "custom_id", "req_ts", "model", "res_ts", "status", "latency_ms"
-        )
         .localCheckpoint(eager=True)
     )
 
@@ -859,65 +777,42 @@ def _scd2_wire_log(spark: SparkSession, sf_dir: str) -> str:
     "— the X15 streaming twin promoted from pytest-only to catalog "
     "row): events replayed as a 3-wave (eu, event_id)-ordered parquet "
     "wire log through readStream → applyInPandasWithState per-user "
-    "open-interval state (streaming/scd2.py) → per-batch "
-    "(user_id, valid_from_us) upsert store, and the FINAL store must "
-    "hash-match the exact same DuckDB oracle as the batch r04 rebuild "
+    "open-interval state (streaming/scd2.py) → micro-batch-keyed "
+    "store read latest-wins per (user_id, valid_from_us), and the "
+    "FINAL view must hash-match the exact same DuckDB oracle as the batch r04 rebuild "
     "— nightly-rebuild ≡ incremental-maintenance checked by the gate "
     "itself. Cross-batch state is real: a user whose state change "
     "straddles waves has the open interval carried by the engine's "
     "state store and CLOSED by a later micro-batch (the closed row "
-    "replaces the open row at the same (user_id, valid_from_us) key). "
+    "supersedes the open row at the same (user_id, valid_from_us) "
+    "key). "
     "Equality argument: the interval build is a fold over the per-user "
     "(eu, event_id)-sorted sequence; each batch sorts within itself "
     "and the waves are contiguous ranges replayed in order, so the "
     "concatenation the state machine sees IS the globally sorted "
     "sequence (the r77 argument). At 100 TB: O(1) state per user "
-    "(RocksDB-backed), one shuffle (the stateful groupBy), store "
-    "upsert becomes MERGE into the dimension table — the canonical "
+    "(RocksDB-backed), one shuffle (the stateful groupBy), the "
+    "latest-wins store becomes MERGE into the dimension table — the canonical "
     "incremental dimension-maintenance topology. Tier-1.",
 )
 def r81_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The returned DataFrame is eagerly localCheckpoint-ed (ADVICE
     r14), so it stays readable even after the next streaming-row call
     reclaims this invocation's run dir."""
-    from ..streaming.scd2 import SCD2_WIRE_SCHEMA, _upsert_intervals, scd2_stateful
+    from ..streaming.scd2 import (
+        INTERVAL_KEYS,
+        INTERVAL_SCHEMA,
+        SCD2_WIRE_SCHEMA,
+        run_scd2_stream,
+    )
 
     wire_dir = _scd2_wire_log(spark, sf_dir)
-    while _LAST_RUN_DIR:
-        shutil.rmtree(_LAST_RUN_DIR.pop(), ignore_errors=True)
-    run_dir = tempfile.mkdtemp(prefix="r81_run_")
-    _LAST_RUN_DIR.append(run_dir)
-    store = os.path.join(run_dir, "store")
-    ckpt = os.path.join(run_dir, "ckpt")
-
-    # single-batch fold below the wire threshold (the r77 rule): extra
-    # micro-batches are pure fixed machinery at toy SF; the multi-wave
-    # open-interval-close contract stays pinned by the pytest twin
-    wire_bytes = sum(
-        os.path.getsize(os.path.join(wire_dir, f))
-        for f in os.listdir(wire_dir)
-        if f.endswith(".parquet")
+    store = _replay(
+        spark, "r81", [wire_dir], _N_WAVES,
+        lambda read, store, ckpt: run_scd2_stream(
+            read(SCD2_WIRE_SCHEMA, wire_dir), store, ckpt
+        ),
     )
-    mft = _N_WAVES if wire_bytes <= _SINGLE_BATCH_MAX_WIRE_BYTES else 1
-    src = (
-        spark.readStream.schema(SCD2_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", mft)
-        .parquet(wire_dir)
-    )
-    out = scd2_stateful(src)
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, _id: _upsert_intervals(df, store)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return (
-        spark.read.parquet(store)
-        .select("user_id", "state", "valid_from_us", "valid_to_us", "is_current")
-        .localCheckpoint(eager=True)
+    return read_latest(spark, store, INTERVAL_SCHEMA, INTERVAL_KEYS).localCheckpoint(
+        eager=True
     )

@@ -668,11 +668,13 @@ def r12_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1 = F.coalesce(F.max("n1"), F.lit(0))
     n2 = F.coalesce(F.max("n2"), F.lit(0))
     d_num = F.max(F.abs(F.col("c1") * F.col("n2") - F.col("c2") * F.col("n1")))
+    # an empty sample makes ks_d NULL, as the oracle's division by zero
+    # does (ANSI `/` would raise DIVIDE_BY_ZERO)
     return cum.agg(
         n1.cast("bigint").alias("n1"),
         n2.cast("bigint").alias("n2"),
         d_num.cast("bigint").alias("d_num"),
-        F.round(d_num.cast("double") / (n1 * n2).cast("double"), 6)
+        F.round(F.try_divide(d_num.cast("double"), (n1 * n2).cast("double")), 6)
         .cast("double")
         .alias("ks_d"),
     )
@@ -754,13 +756,14 @@ def r13_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(1 - F.col("is1")).alias("n2"),
     )
     u1d = F.col("r1d") - F.col("n1") * (F.col("n1") + 1)
+    # an empty sample makes auc NULL, as in the oracle (see r12)
     return agg.select(
         F.col("n1").cast("bigint").alias("n1"),
         F.col("n2").cast("bigint").alias("n2"),
         u1d.cast("bigint").alias("u1_doubled"),
         (2 * F.col("n1") * F.col("n2") - u1d).cast("bigint").alias("u2_doubled"),
         F.round(
-            u1d.cast("double") / (2.0 * F.col("n1") * F.col("n2")), 6
+            F.try_divide(u1d.cast("double"), 2.0 * F.col("n1") * F.col("n2")), 6
         ).cast("double").alias("auc"),
     )
 

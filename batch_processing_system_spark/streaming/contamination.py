@@ -1,8 +1,8 @@
 """Continuous contamination screening (the streaming form of q78's
 train/eval audit): documents arrive as JSONL files; each micro-batch
 is checked for 8-gram overlap against a fixed held-out benchmark gram
-set, flagged documents are quarantined, clean documents appended to
-the training corpus.
+set, flagged documents are quarantined, clean documents added to the
+training corpus.
 
 The benchmark gram set is loaded once at stream definition and
 broadcast into every micro-batch join — the production shape exactly:
@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.statestore import write_bid_store
 from ..queries.packing import distinct_word_ngrams, screened_grams
 from .dedup import INCOMING_DOC_SCHEMA
 
@@ -67,17 +68,20 @@ def stream_screen_documents(
     n: int = 8,
 ):
     """Wire a JSONL document stream through the contamination screen:
-    clean docs append to ``clean_path``, contaminated docs to
-    ``flagged_path`` (the quarantine an auditor reviews). Returns the
-    DataStreamWriter — caller picks the trigger (availableNow for
-    catch-up, processingTime for continuous ingestion)."""
+    clean docs go to the ``clean_path`` log, contaminated docs to the
+    ``flagged_path`` log (the quarantine an auditor reviews), each
+    micro-batch as its own ``bid=<N>`` partition, so a batch replayed
+    after a failed flagged write does not double its clean rows. Read
+    either with ``read_bid_store``. Returns the DataStreamWriter —
+    caller picks the trigger (availableNow for catch-up,
+    processingTime for continuous ingestion)."""
     grams = eval_gram_set(eval_docs, n).localCheckpoint(eager=True)
     incoming = spark.readStream.schema(INCOMING_DOC_SCHEMA).json(incoming_dir)
 
     def route(batch_df: DataFrame, batch_id: int) -> None:
         clean, flagged = screen_batch(batch_df, grams, n)
-        clean.write.mode("append").parquet(clean_path)
-        flagged.write.mode("append").parquet(flagged_path)
+        write_bid_store(clean, clean_path, batch_id)
+        write_bid_store(flagged, flagged_path, batch_id)
 
     return incoming.writeStream.foreachBatch(route).option(
         "checkpointLocation", checkpoint

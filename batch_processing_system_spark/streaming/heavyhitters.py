@@ -37,14 +37,19 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..pipeline.statestore import stream_updates
 
 DEFAULT_K = 16
 
 #: kind: 0 = tracked item, 1 = subtracted-error mass, 2 = row count
 _SUMMARY_SCHEMA = "key bigint, w bigint, kind int"
 _STATE_SCHEMA = "keys array<bigint>, counts array<bigint>, err bigint, n bigint"
-_OUT_SCHEMA = "key bigint, est bigint, err bigint, n bigint"
+SKETCH_SCHEMA = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("key", "est", "err", "n")]
+)
 
 
 def _mg_reduce(weighted: dict[int, int], k: int) -> tuple[dict[int, int], int]:
@@ -118,7 +123,7 @@ def heavy_hitters_stateful(
         .groupBy("g")
         .applyInPandasWithState(
             lambda key, pdfs, state: _merge_summaries(key, pdfs, state, k),
-            outputStructType=_OUT_SCHEMA,
+            outputStructType=SKETCH_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
@@ -135,7 +140,10 @@ _FACET_SUMMARY_SCHEMA = "facet string, key string, w bigint, kind int"
 _FACET_STATE_SCHEMA = (
     "keys array<string>, counts array<bigint>, err bigint, n bigint"
 )
-_FACET_OUT_SCHEMA = "facet string, key string, est bigint, err bigint, n bigint"
+FACET_SKETCH_SCHEMA = T.StructType(
+    [T.StructField("facet", T.StringType()), T.StructField("key", T.StringType())]
+    + [T.StructField(c, T.LongType()) for c in ("est", "err", "n")]
+)
 
 
 def summarize_facet_batches(
@@ -214,31 +222,18 @@ def heavy_hitters_faceted(
     )
     return summaries.groupBy("facet").applyInPandasWithState(
         lambda key, pdfs, state: _merge_facet_summaries(key, pdfs, state, k),
-        outputStructType=_FACET_OUT_SCHEMA,
+        outputStructType=FACET_SKETCH_SCHEMA,
         stateStructType=_FACET_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-def run_heavy_hitters_stream(
-    spark, incoming_dir: str, store_path: str, checkpoint: str
-):
-    """availableNow file stream -> sketch store (full overwrite per
-    non-empty batch: the k-row sketch IS the complete answer)."""
-    from .journeys import EVENT_WIRE_SCHEMA
-
-    src = spark.readStream.schema(EVENT_WIRE_SCHEMA).json(incoming_dir)
-    out = heavy_hitters_stateful(src)
-
-    def _replace(df: DataFrame, _id: int) -> None:
-        snap = df.localCheckpoint(eager=True)
-        if snap.count() > 0:
-            snap.write.mode("overwrite").parquet(store_path)
-
-    return (
-        out.writeStream.foreachBatch(_replace)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
+def run_heavy_hitters_stream(events: DataFrame, store_path: str, checkpoint: str):
+    """Event stream (the caller builds the source) → sketch store.
+    Every micro-batch writes the whole sketch, so the current sketch is
+    the latest batch's rows:
+    ``read_latest(spark, store_path, SKETCH_SCHEMA, [])``. The faceted
+    twin (r79) streams ``heavy_hitters_faceted`` the same way and reads
+    one sketch per facet with keys ``["facet"]``."""
+    return stream_updates(heavy_hitters_stateful(events), store_path, checkpoint)

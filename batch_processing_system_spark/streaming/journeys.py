@@ -20,6 +20,12 @@ what the batch semantics need and nothing more —
   by the watermark/retention horizon; the matrix only reads offsets
   ≤ 7 but min-day revisions need the full set).
 
+Store: every micro-batch's emissions land as the store's own
+``bid=<N>`` partition (``statestore.stream_updates``), and a user's
+current rows are all rows of the latest batch that touched them
+(``statestore.read_latest``). A batch replayed after a crash rewrites
+its partition, so the store never loses or doubles a user.
+
 Scale note: state is engine-managed (RocksDB-backed on a real
 cluster), keyed by user — O(#users) entries, each O(1) (funnel) or
 O(active days) (retention). No shuffle beyond the groupBy(user) the
@@ -32,15 +38,15 @@ NULL in the output (events at epoch 0 are out of scope by contract).
 
 from __future__ import annotations
 
-import os
-import shutil
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..pipeline.statestore import stream_updates
 
 #: Replayed-event wire schema: es = epoch seconds (bigint), d = days
 #: since epoch (int) — both precomputed at export time through the
@@ -57,8 +63,9 @@ EVENT_WIRE_SCHEMA = T.StructType(
 )
 
 _FUNNEL_STATE_SCHEMA = "stage int, t1 bigint, t2 bigint, t3 bigint"
-_FUNNEL_OUT_SCHEMA = (
-    "user_id bigint, stage int, t1 bigint, t2 bigint, t3 bigint"
+FUNNEL_SCHEMA = T.StructType(
+    [T.StructField("user_id", T.LongType()), T.StructField("stage", T.IntegerType())]
+    + [T.StructField(t, T.LongType()) for t in ("t1", "t2", "t3")]
 )
 
 
@@ -97,7 +104,7 @@ def funnel_stateful(events_stream: DataFrame) -> DataFrame:
     times every micro-batch."""
     return events_stream.groupBy("user_id").applyInPandasWithState(
         _advance_funnel,
-        outputStructType=_FUNNEL_OUT_SCHEMA,
+        outputStructType=FUNNEL_SCHEMA,
         stateStructType=_FUNNEL_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -105,7 +112,13 @@ def funnel_stateful(events_stream: DataFrame) -> DataFrame:
 
 
 _RET_STATE_SCHEMA = "days array<int>"
-_RET_OUT_SCHEMA = "user_id bigint, cohort_day int, offset_days bigint"
+RETENTION_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("cohort_day", T.IntegerType()),
+        T.StructField("offset_days", T.LongType()),
+    ]
+)
 
 
 def _advance_retention(
@@ -130,135 +143,32 @@ def _advance_retention(
 def retention_stateful(events_stream: DataFrame) -> DataFrame:
     """q96's cohort/offset assignment with per-user day-set state;
     each batch emits the user's FULL corrected (cohort, offset) set,
-    so downstream stores overwrite-by-user rather than append."""
+    so the store's current view is all rows of the user's latest
+    batch (``statestore.read_latest``)."""
     return events_stream.groupBy("user_id").applyInPandasWithState(
         _advance_retention,
-        outputStructType=_RET_OUT_SCHEMA,
+        outputStructType=RETENTION_SCHEMA,
         stateStructType=_RET_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-def _upsert_store(updates: DataFrame, store_path: str) -> None:
-    """Replace each updated user's rows in the parquet store (read,
-    anti-join, union, swap — the test-scale stand-in for Delta
-    MERGE, same as streaming/state.py's poll store)."""
-    spark = updates.sparkSession
-    updates = updates.localCheckpoint(eager=True)
-    if os.path.exists(store_path):
-        kept = spark.read.parquet(store_path).join(
-            updates.select("user_id").distinct(), "user_id", "left_anti"
-        )
-        merged = kept.unionByName(updates)
-    else:
-        merged = updates
-    merged.write.mode("overwrite").parquet(store_path + "_next")
-    shutil.rmtree(store_path, ignore_errors=True)
-    shutil.move(store_path + "_next", store_path)
+def run_funnel_stream(events: DataFrame, store_path: str, checkpoint: str):
+    """Wire a replayed-event stream (``EVENT_WIRE_SCHEMA``; the caller
+    builds the source: a JSONL directory, or r77's parquet wire log
+    with ``maxFilesPerTrigger``) through the funnel automaton into a
+    per-user store. availableNow trigger = catch-up replay; the
+    checkpoint carries file offsets AND the automaton state across
+    restarts. Read the store with
+    ``read_latest(spark, store_path, FUNNEL_SCHEMA, ["user_id"])``."""
+    return stream_updates(funnel_stateful(events), store_path, checkpoint)
 
 
-def run_funnel_stream(
-    spark: SparkSession, incoming_dir: str, store_path: str, checkpoint: str
-):
-    """Wire a replayed-event JSONL stream through the funnel automaton
-    into a per-user parquet store. availableNow trigger = catch-up
-    replay; the checkpoint carries file offsets AND the automaton
-    state across restarts."""
-    src = spark.readStream.schema(EVENT_WIRE_SCHEMA).json(incoming_dir)
-    out = funnel_stateful(src)
-    return (
-        out.writeStream.foreachBatch(
-            lambda df, _id: _upsert_store(df, store_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-
-
-def _append_store(updates: DataFrame, store_path: str, batch_id: int) -> None:
-    """Append this batch's updates to a batch-sequenced decision log;
-    the current state of a user is their row with the highest
-    ``batch_seq`` (``latest_per_key`` resolves it). At 100 TB this is
-    the MORE scalable serving shape than the read-antijoin-rewrite
-    upsert: each micro-batch does one append write sized by the batch
-    (never by the store), and compaction into a latest-wins serving
-    table becomes an independent, batched MERGE — the same
-    log-then-compact split every large ingest pipeline makes."""
-    updates.withColumn("batch_seq", F.lit(batch_id)).write.mode(
-        "append"
-    ).parquet(store_path)
-
-
-def latest_per_key(store: DataFrame, key: str = "user_id") -> DataFrame:
-    """Resolve an ``_append_store`` log to its latest-wins view: the
-    highest-``batch_seq`` row per key (ties impossible — update mode
-    emits at most one row per key per batch)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(key).orderBy(F.col("batch_seq").desc())
-    return (
-        store.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "batch_seq")
-    )
-
-
-def run_funnel_stream_parquet(
-    spark: SparkSession,
-    wire_dir: str,
-    store_path: str,
-    checkpoint: str,
-    max_files_per_trigger: int = 1,
-    store_mode: str = "upsert",
-):
-    """The funnel replay over a PARQUET wire log (the catalog-facing
-    twin of ``run_funnel_stream``, VERDICT r12 item 6): availableNow +
-    ``maxFilesPerTrigger`` splits the replay into one micro-batch per
-    wire file, processed oldest-mtime-first (Spark's file source
-    ordering), so per-user state genuinely crosses micro-batch
-    boundaries when the wire files are time-ordered waves. Parquet
-    rather than JSONL because the wire log is written by Spark itself
-    (no driver-side collect at any scale) and the schema rides along.
-
-    ``store_mode``: ``"upsert"`` rewrites the store per batch (the
-    in-place serving-table shape); ``"append"`` writes a
-    batch-sequenced log resolved by ``latest_per_key`` — one
-    batch-sized write per micro-batch instead of a store-sized
-    rewrite (VERDICT r13 item 3; the two modes are equivalence-tested
-    in tests/test_streaming_journeys.py)."""
-    src = (
-        spark.readStream.schema(EVENT_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(wire_dir)
-    )
-    out = funnel_stateful(src)
-    if store_mode == "append":
-        sink = lambda df, bid: _append_store(df, store_path, bid)  # noqa: E731
-    else:
-        sink = lambda df, _id: _upsert_store(df, store_path)  # noqa: E731
-    return (
-        out.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-
-
-def run_retention_stream(
-    spark: SparkSession, incoming_dir: str, store_path: str, checkpoint: str
-):
-    src = spark.readStream.schema(EVENT_WIRE_SCHEMA).json(incoming_dir)
-    out = retention_stateful(src)
-    return (
-        out.writeStream.foreachBatch(
-            lambda df, _id: _upsert_store(df, store_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
+def run_retention_stream(events: DataFrame, store_path: str, checkpoint: str):
+    """The retention twin of ``run_funnel_stream``; read the store with
+    ``read_latest(spark, store_path, RETENTION_SCHEMA, ["user_id"])``."""
+    return stream_updates(retention_stateful(events), store_path, checkpoint)
 
 
 def retention_matrix(store: DataFrame) -> DataFrame:

@@ -16,6 +16,13 @@ State is externalized to two parquet stores, like the exact twin:
   re-shingles only the candidates' texts (bounded by the candidate
   set, the q42 discipline).
 
+Both stores, and the decision log, are ``bid=<N>`` logs
+(``statestore.write_bid_store``) read without the current batch's
+partition: foreachBatch is at-least-once, and a batch replayed after
+its band write landed but its corpus write failed must not meet its
+own bands as earlier arrivals (``streaming/dedup.py`` keeps the same
+contract).
+
 Bands come from queries/similarity.minhash_bands, the package's one
 MinHash family (q42 uses it too): its hash functions are drawn from a
 fixed seed at import, so every batch across the stream's life — and
@@ -46,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..engine.io import local_frame
-from ..pipeline.statestore import read_state
+from ..pipeline.statestore import read_bid_store, write_bid_store
 from ..queries.similarity import (
     _band_self_join,
     _shingles,
@@ -137,7 +144,7 @@ def _decisions_driver(
     # identical text means identical bands, so the candidate always
     # exists). Redelivery matters twice (ADVICE r14 + the r15 audit):
     # (1) the redelivery itself must be cross-rejected (the store copy
-    # is the earlier arrival), never kept and re-appended; (2) a pair
+    # is the earlier arrival), never kept and stored twice; (2) a pair
     # (a, b) with a redelivered is a STORE hit even though a is in the
     # batch — classifying it within-batch would let b survive whenever
     # the redelivered copy is rejected, admitting a near-copy of a
@@ -308,12 +315,16 @@ def _decisions_distributed(
         F.lit(True).alias("kept"),
         F.lit(None).cast("long").alias("dup_of"),
     )
-    # output-sized; consumed by two store appends plus the caller
+    # output-sized; consumed by two store writes plus the caller
     return rejected_all.unionByName(kept_all).localCheckpoint(eager=True)
 
 
 def neardup_batch(
-    spark: SparkSession, batch: DataFrame, corpus_path: str, bands_path: str
+    spark: SparkSession,
+    batch: DataFrame,
+    corpus_path: str,
+    bands_path: str,
+    batch_id: int,
 ) -> DataFrame:
     """One micro-batch of near-dup dedup against the persistent stores.
 
@@ -321,7 +332,9 @@ def neardup_batch(
     smallest kept document the rejected arrival verified against
     (cross-batch matches win over within-batch ones — the earlier
     arrival IS the canonical copy). Survivors' texts and bands are
-    appended to the stores."""
+    written as the stores' ``bid=<batch_id>`` partitions; the store
+    reads skip that partition, so a replay of this batch after a
+    partial write decides exactly as the first attempt did."""
     # bounded-collect: micro-batch id list (batch-sized, not corpus)
     batch_ids = sorted(r["doc_id"] for r in batch.select("doc_id").collect())
     if not batch_ids:
@@ -330,7 +343,7 @@ def neardup_batch(
     # spent three — batch, shingles, bands — and each is a full job of
     # fixed launch cost at toy SF). Only `bands` pays for itself: it
     # feeds FOUR consumers (the cross join, both sides of the
-    # within-batch self-join, and the kept-bands append), so without it
+    # within-batch self-join, and the kept-bands write), so without it
     # the shingle→murmur→min agg re-runs four times AND the self-join
     # can't reuse one side. `batch` (three consumers) is a source-batch
     # re-read — narrow, file-backed, cheaper to recompute than a
@@ -340,12 +353,12 @@ def neardup_batch(
     # row.
     sh_batch = _shingles(batch, n=5)
     bands = minhash_bands(sh_batch).localCheckpoint(eager=True)
-    store_bands = read_state(spark, bands_path, BAND_SCHEMA)
+    store_bands = read_bid_store(spark, bands_path, BAND_SCHEMA, batch_id)
 
     # --- candidates: cross-batch (batch ⋈ store) + within-batch ------
     cross = _band_cross_join(bands, store_bands)
     wb_cand = _band_self_join(bands)
-    corpus = read_state(spark, corpus_path, CORPUS_SCHEMA)
+    corpus = read_bid_store(spark, corpus_path, CORPUS_SCHEMA, batch_id)
     # the anti-join against the batch's ids is REQUIRED (ADVICE r15,
     # medium): under id redelivery the store holds a copy of a doc_id
     # that is ALSO in sh_batch — shingling both sides would put that
@@ -384,29 +397,16 @@ def neardup_batch(
     # survivors is consumed once and is a cheap semijoin of the
     # file-backed source batch against the kept-id filter — a
     # localCheckpoint here would cost more (one extra job) than the
-    # recompute it saves. The two store appends are independent jobs
-    # over already-materialized inputs (decisions and bands are both
-    # checkpointed), so submit them from a 2-thread pool and let each
-    # write's task tail backfill the other (guide §2.6) — round-17,
-    # worth ~0.3 s of the per-micro-batch fixed cost at toy SF and
-    # harmless on a cluster scheduler.
+    # recompute it saves
     kept_filter = decisions.filter("kept").select("doc_id")
-    survivors = batch.join(kept_filter, "doc_id", "left_semi")
-
-    def _append_corpus() -> None:
-        survivors.write.mode("append").parquet(corpus_path)
-
-    def _append_bands() -> None:
-        bands.join(kept_filter, "doc_id", "left_semi").select(
-            "band", "h", "doc_id"
-        ).write.mode("append").parquet(bands_path)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_append_corpus), pool.submit(_append_bands)]
-        for f in futs:
-            f.result()
+    write_bid_store(
+        bands.join(kept_filter, "doc_id", "left_semi").select("band", "h", "doc_id"),
+        bands_path,
+        batch_id,
+    )
+    write_bid_store(
+        batch.join(kept_filter, "doc_id", "left_semi"), corpus_path, batch_id
+    )
     return decisions
 
 
@@ -418,9 +418,9 @@ def stream_neardup_documents(
     decisions_path: str,
     checkpoint: str,
 ):
-    """JSONL document stream → greedy near-dup dedup → append-only kept
-    corpus + band store + decision log. File offsets live in the
-    checkpoint; the stores are the cross-restart dedup memory.
+    """JSONL document stream → greedy near-dup dedup → kept corpus +
+    band store + decision log (``neardup_sink``). File offsets live in
+    the checkpoint; the stores are the cross-restart dedup memory.
 
     BATCH-SIZE CONTRACT (the sink's operating envelope): per
     micro-batch the driver materializes the batch's doc_id list plus,
@@ -433,13 +433,21 @@ def stream_neardup_documents(
     driver-memory ceiling — the trade is extra per-round jobs, which a
     batch that size amortizes."""
     incoming = spark.readStream.schema(INCOMING_DOC_SCHEMA).json(incoming_dir)
+    return incoming.writeStream.foreachBatch(
+        neardup_sink(corpus_path, bands_path, decisions_path)
+    ).option("checkpointLocation", checkpoint)
+
+
+def neardup_sink(corpus_path: str, bands_path: str, decisions_path: str):
+    """The foreachBatch function of a near-dup stream: decide the
+    micro-batch against the stores, then write its decisions as the
+    ``bid=<N>`` partition of the decision log (read the three logs with
+    ``read_bid_store``)."""
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         decisions = neardup_batch(
-            batch_df.sparkSession, batch_df, corpus_path, bands_path
+            batch_df.sparkSession, batch_df, corpus_path, bands_path, batch_id
         )
-        decisions.write.mode("append").parquet(decisions_path)
+        write_bid_store(decisions, decisions_path, batch_id)
 
-    return incoming.writeStream.foreachBatch(merge_batch).option(
-        "checkpointLocation", checkpoint
-    )
+    return merge_batch

@@ -10,9 +10,11 @@ minimum the semantics need. Each micro-batch processes the user's
 events in (eu, event_id) order; a state change CLOSES the open
 interval (emitting its final row) and opens a new one; the open
 interval is (re-)emitted every batch the user is touched, with
-valid_to_us NULL. The store upserts on (user_id, valid_from_us):
-closed intervals are immutable once written, the open row is replaced
-in place when it closes — so the store converges to exactly r04's
+valid_to_us NULL. Each micro-batch's rows land as the store's own
+``bid=<N>`` partition, and the store is read latest-wins per
+(user_id, valid_from_us) (``statestore.read_latest``): closed
+intervals are immutable once written, the open row is superseded when
+a later batch closes it — so the store converges to exactly r04's
 batch answer under the time-ordered replay contract (same contract as
 the funnel twin; out-of-order arrivals WITHIN a batch are fine, the
 batch sorts).
@@ -23,14 +25,14 @@ user, constant size; the only shuffle is the stateful groupBy(user).
 
 from __future__ import annotations
 
-import os
-import shutil
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..pipeline.statestore import stream_updates
 
 #: Wire schema: eu = epoch MICROseconds via the same engine.det.epoch_us
 #: normalization r04 uses, so batch and stream cannot disagree on
@@ -45,10 +47,17 @@ SCD2_WIRE_SCHEMA = T.StructType(
 )
 
 _STATE_SCHEMA = "state string, vfrom bigint"
-_OUT_SCHEMA = (
-    "user_id bigint, state string, valid_from_us bigint, "
-    "valid_to_us bigint, is_current boolean"
+INTERVAL_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("state", T.StringType()),
+        T.StructField("valid_from_us", T.LongType()),
+        T.StructField("valid_to_us", T.LongType()),
+        T.StructField("is_current", T.BooleanType()),
+    ]
 )
+#: an interval's identity in the store: its latest emission wins
+INTERVAL_KEYS = ["user_id", "valid_from_us"]
 
 
 def _advance_scd2(
@@ -93,45 +102,17 @@ def scd2_stateful(events_stream: DataFrame) -> DataFrame:
     re-emitted (update semantics) until a change closes it."""
     return events_stream.groupBy("user_id").applyInPandasWithState(
         _advance_scd2,
-        outputStructType=_OUT_SCHEMA,
+        outputStructType=INTERVAL_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-def _upsert_intervals(updates: DataFrame, store_path: str) -> None:
-    """Replace by (user_id, valid_from_us): closed intervals land once
-    and never change; the open row is overwritten when it closes (the
-    test-scale stand-in for Delta MERGE, as in streaming/journeys.py)."""
-    spark = updates.sparkSession
-    updates = updates.localCheckpoint(eager=True)
-    keys = ["user_id", "valid_from_us"]
-    if os.path.exists(store_path):
-        kept = spark.read.parquet(store_path).join(
-            updates.select(*keys).distinct(), keys, "left_anti"
-        )
-        merged = kept.unionByName(updates)
-    else:
-        merged = updates
-    merged.write.mode("overwrite").parquet(store_path + "_next")
-    shutil.rmtree(store_path, ignore_errors=True)
-    shutil.move(store_path + "_next", store_path)
-
-
-def run_scd2_stream(
-    spark: SparkSession, incoming_dir: str, store_path: str, checkpoint: str
-):
-    """Replayed-event JSONL → SCD2 interval store. availableNow trigger
-    for catch-up replay; the checkpoint carries file offsets and the
-    open-interval state across restarts."""
-    src = spark.readStream.schema(SCD2_WIRE_SCHEMA).json(incoming_dir)
-    out = scd2_stateful(src)
-    return (
-        out.writeStream.foreachBatch(
-            lambda df, _id: _upsert_intervals(df, store_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
+def run_scd2_stream(events: DataFrame, store_path: str, checkpoint: str):
+    """Replayed-event stream (``SCD2_WIRE_SCHEMA``; the caller builds
+    the source) → SCD2 interval store. availableNow trigger for
+    catch-up replay; the checkpoint carries file offsets and the
+    open-interval state across restarts. Read the store with
+    ``read_latest(spark, store_path, INTERVAL_SCHEMA, INTERVAL_KEYS)``."""
+    return stream_updates(scd2_stateful(events), store_path, checkpoint)

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..pipeline.statestore import write_bid_store
+
 REQUEST_WIRE_SCHEMA = T.StructType(
     [
         T.StructField("custom_id", T.StringType()),
@@ -51,6 +53,12 @@ RESULT_WIRE_SCHEMA = T.StructType(
         T.StructField("res_ts", T.TimestampType()),
         T.StructField("status", T.StringType()),
     ]
+)
+
+JOINED_SCHEMA = T.StructType(
+    REQUEST_WIRE_SCHEMA.fields
+    + RESULT_WIRE_SCHEMA.fields[1:]
+    + [T.StructField("latency_ms", T.LongType())]
 )
 
 
@@ -95,42 +103,26 @@ def join_requests_results(
 
 
 def run_request_result_join_stream(
-    spark,
-    requests_dir: str,
-    results_dir: str,
+    requests: DataFrame,
+    results: DataFrame,
     out_path: str,
     checkpoint: str,
     horizon_seconds: int = 3600,
     delay_seconds: int = 60,
     how: str = "inner",
 ):
-    """File-replayed twin: JSONL request/result streams → parquet of
-    joined rows. foreachBatch append sink (idempotent enough for the
-    tests' single-writer waves; the join itself is engine-managed
-    state, checkpoint-recoverable across runs)."""
-    req = (
-        spark.readStream.schema(REQUEST_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(requests_dir)
-    )
-    res = (
-        spark.readStream.schema(RESULT_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(results_dir)
-    )
+    """Request and result streams (``REQUEST_WIRE_SCHEMA`` /
+    ``RESULT_WIRE_SCHEMA``; the caller builds the sources) → the joined
+    rows as a bid log at ``out_path`` (read it with
+    ``read_bid_store(spark, out_path, JOINED_SCHEMA)``). The join itself
+    is engine-managed state, checkpoint-recoverable across runs."""
     joined = join_requests_results(
-        req, res, horizon_seconds, delay_seconds, how=how
+        requests, results, horizon_seconds, delay_seconds, how=how
     )
-
-    def sink(batch_df: DataFrame, bid: int) -> None:
-        import os
-
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"bid={bid}")
-        )
-
     return (
-        joined.writeStream.foreachBatch(sink)
+        joined.writeStream.foreachBatch(
+            lambda df, bid: write_bid_store(df, out_path, bid)
+        )
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )

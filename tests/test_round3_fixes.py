@@ -1,7 +1,6 @@
 """Round-3 hardening tests: the hot-cluster blind spot of the q46
-hot-shingle cut (ADVICE), the q78 hot-gram screen + wholesale-copy
-exemption with 1:1 oracle parity, and the streaming contamination
-screen's boilerplate immunity."""
+hot-shingle cut and the q78 hot-gram screen + wholesale-copy
+exemption with 1:1 oracle parity."""
 
 from __future__ import annotations
 
@@ -137,29 +136,6 @@ class TestQ78HotGramScreen:
         )
         want = {tuple(r) for r in con.execute(REGISTRY["q78_contamination"].oracle).fetchall()}
         assert got == want and len(got) > 0
-
-
-class TestStreamingScreenBoilerplate:
-    def test_boilerplate_not_quarantined_copy_is(self, spark):
-        from batch_processing_system_spark.streaming.contamination import (
-            eval_gram_set,
-            screen_batch,
-        )
-
-        boiler = " ".join(f"b{j}" for j in range(8))
-        bench_text = " ".join(f"q{j}" for j in range(40))
-        eval_docs = spark.createDataFrame(
-            [(1, boiler + " " + bench_text)], "doc_id bigint, text string"
-        )
-        grams = eval_gram_set(eval_docs)
-
-        rows = [(i, boiler + " " + " ".join(f"d{i}w{j}" for j in range(30)))
-                for i in range(100)]
-        rows.append((500, bench_text))  # wholesale benchmark copy
-        batch = spark.createDataFrame(rows, "doc_id bigint, text string")
-        clean, flagged = screen_batch(batch, grams)
-        assert [r["doc_id"] for r in flagged.collect()] == [500]
-        assert clean.count() == 100
 
 
 class TestHardening:

@@ -13,11 +13,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from batch_processing_system_spark.engine.io import load_table
+from batch_processing_system_spark.pipeline.statestore import read_latest
 from batch_processing_system_spark.streaming.heavyhitters import (
     DEFAULT_K,
+    SKETCH_SCHEMA,
     _mg_reduce,
     run_heavy_hitters_stream,
 )
+from batch_processing_system_spark.streaming.journeys import EVENT_WIRE_SCHEMA
 
 from .conftest import SF_SMALL
 
@@ -117,13 +120,12 @@ class TestHeavyHitterStream:
         ckpt = str(tmp_path / "ckpt")
         for w in waves:  # each wave its own run: checkpoint restart
             shutil.copy(w, incoming)
-            q = run_heavy_hitters_stream(
-                spark, str(incoming), store, ckpt
-            ).start()
+            src = spark.readStream.schema(EVENT_WIRE_SCHEMA).json(str(incoming))
+            q = run_heavy_hitters_stream(src, store, ckpt).start()
             q.awaitTermination(120)
         sketch = {
             r["key"]: (r["est"], r["err"], r["n"])
-            for r in spark.read.parquet(store).collect()
+            for r in read_latest(spark, store, SKETCH_SCHEMA, []).collect()
         }
         assert sketch and len(sketch) <= DEFAULT_K
         _, err, seen = next(iter(sketch.values()))
@@ -152,12 +154,11 @@ class TestHeavyHitterStream:
             "\n".join(json.dumps(r) for r in rows) + "\n"
         )
         store = str(tmp_path / "store")
-        q = run_heavy_hitters_stream(
-            spark, str(incoming), store, str(tmp_path / "ckpt")
-        ).start()
+        src = spark.readStream.schema(EVENT_WIRE_SCHEMA).json(str(incoming))
+        q = run_heavy_hitters_stream(src, store, str(tmp_path / "ckpt")).start()
         q.awaitTermination(120)
         got = sorted(
-            spark.read.parquet(store).collect(),
+            read_latest(spark, store, SKETCH_SCHEMA, []).collect(),
             key=lambda r: (-r["est"], r["key"]),
         )
         true_hot = sum(1 for r in rows if r["user_id"] == 777)
@@ -183,10 +184,6 @@ class TestFacetedHeavyHitters:
         from batch_processing_system_spark.streaming.heavyhitters import (
             heavy_hitters_faceted,
         )
-        from batch_processing_system_spark.streaming.journeys import (
-            EVENT_WIRE_SCHEMA,
-        )
-
         waves, _true, n = hh_waves
         incoming = tmp_path / "incoming"
         incoming.mkdir()

@@ -8,12 +8,17 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from batch_processing_system_spark.engine.io import load_table
+from batch_processing_system_spark.pipeline.statestore import read_bid_store
 from batch_processing_system_spark.queries.similarity import _shingles, minhash_bands, q42
 from batch_processing_system_spark.queries.text import q46_neardup_jaccard
 from batch_processing_system_spark.streaming.neardup import (
+    BAND_SCHEMA,
+    CORPUS_SCHEMA,
+    DECISION_SCHEMA,
     neardup_batch,
     stream_neardup_documents,
 )
@@ -73,6 +78,7 @@ class TestBatchGreedy:
             _df(spark, rows),
             str(tmp_path / "corpus"),
             str(tmp_path / "bands"),
+            0,
         ).collect()
         got = {r["doc_id"]: (r["kept"], r["dup_of"]) for r in decisions}
         assert set(got) == {1, 2, 3, 4, 5}
@@ -89,12 +95,12 @@ class TestBatchGreedy:
 
     def test_cross_batch_rejection(self, spark, tmp_path):
         corpus, bands = str(tmp_path / "corpus"), str(tmp_path / "bands")
-        d1 = neardup_batch(spark, _df(spark, [(1, DOC_A)]), corpus, bands).collect()
+        d1 = neardup_batch(spark, _df(spark, [(1, DOC_A)]), corpus, bands, 0).collect()
         assert d1[0]["kept"] is True
         d2 = {
             r["doc_id"]: (r["kept"], r["dup_of"])
             for r in neardup_batch(
-                spark, _df(spark, [(10, DOC_B), (11, DOC_D)]), corpus, bands
+                spark, _df(spark, [(10, DOC_B), (11, DOC_D)]), corpus, bands, 1
             ).collect()
         }
         assert d2[10] == (False, 1)  # later arrival loses to kept doc 1
@@ -166,6 +172,55 @@ class TestCorpusReplay:
             assert r["dup_of"] in got_kept and r["dup_of"] < r["doc_id"]
 
 
+class TestReplay:
+    def test_replay_after_failed_corpus_write_keeps_survivors(
+        self, spark, tmp_path
+    ):
+        """foreachBatch is at-least-once: a batch whose band write
+        landed but whose corpus write failed is replayed on restart.
+        The replay must not meet its own bands as earlier arrivals
+        (they would reject every survivor as a dup of itself), and it
+        must leave each corpus, band and decision row once."""
+        incoming = tmp_path / "in"
+        incoming.mkdir()
+        (incoming / "w1.jsonl").write_text(
+            "".join(
+                json.dumps({"doc_id": d, "text": t}) + "\n"
+                for d, t in [(1, DOC_A), (2, DOC_B), (4, DOC_D)]
+            )
+        )
+        corpus, bands, decisions = (
+            str(tmp_path / n) for n in ("corpus", "bands", "decisions")
+        )
+
+        def run():
+            stream_neardup_documents(
+                spark, str(incoming), corpus, bands, decisions,
+                str(tmp_path / "ckpt"),
+            ).trigger(availableNow=True).start().awaitTermination(120)
+
+        # an empty plain file where the corpus directory goes: it reads
+        # as an empty store, the band write lands, the corpus write fails
+        blocker = tmp_path / "corpus"
+        blocker.write_text("")
+        with pytest.raises(StreamingQueryException):
+            run()
+        assert read_bid_store(spark, bands, BAND_SCHEMA).count() == 32
+        blocker.unlink()
+
+        run()
+        got = {
+            r["doc_id"]: (r["kept"], r["dup_of"])
+            for r in read_bid_store(spark, decisions, DECISION_SCHEMA).collect()
+        }
+        assert got == {1: (True, None), 2: (False, 1), 4: (True, None)}
+        stored = read_bid_store(spark, corpus, CORPUS_SCHEMA).collect()
+        assert sorted(r["doc_id"] for r in stored) == [1, 4]
+        band_rows = read_bid_store(spark, bands, BAND_SCHEMA)
+        assert band_rows.count() == band_rows.distinct().count() == 32
+        assert read_bid_store(spark, decisions, DECISION_SCHEMA).count() == 3
+
+
 class TestRedelivery:
     def test_redelivered_id_is_rejected_not_duplicated(self, spark, tmp_path):
         """ADVICE r14: a re-delivered doc_id already kept in the store
@@ -173,12 +228,12 @@ class TestRedelivery:
         the store copy is the earlier arrival — not kept and appended
         to the corpus/band stores a second time."""
         corpus, bands = str(tmp_path / "corpus"), str(tmp_path / "bands")
-        d1 = neardup_batch(spark, _df(spark, [(1, DOC_A)]), corpus, bands)
+        d1 = neardup_batch(spark, _df(spark, [(1, DOC_A)]), corpus, bands, 0)
         assert d1.collect()[0]["kept"] is True
         d2 = {
             r["doc_id"]: (r["kept"], r["dup_of"])
             for r in neardup_batch(
-                spark, _df(spark, [(1, DOC_A), (7, DOC_D)]), corpus, bands
+                spark, _df(spark, [(1, DOC_A), (7, DOC_D)]), corpus, bands, 1
             ).collect()
         }
         assert d2[1] == (False, 1)  # redelivery loses to the store copy
@@ -199,7 +254,7 @@ class TestRedelivery:
         would let 10 survive (its only 'neighbor' 1 is itself rejected)
         and the corpus would admit a near-copy of a held document."""
         corpus, bands = str(tmp_path / "corpus"), str(tmp_path / "bands")
-        neardup_batch(spark, _df(spark, [(1, DOC_A)]), corpus, bands).collect()
+        neardup_batch(spark, _df(spark, [(1, DOC_A)]), corpus, bands, 0).collect()
         d2 = {
             r["doc_id"]: (r["kept"], r["dup_of"])
             for r in neardup_batch(
@@ -207,6 +262,7 @@ class TestRedelivery:
                 _df(spark, [(1, DOC_A), (10, DOC_B), (11, DOC_D)]),
                 corpus,
                 bands,
+                1,
             ).collect()
         }
         assert d2[1] == (False, 1)  # redelivery: store copy wins
@@ -239,6 +295,7 @@ class TestDistributedGreedy:
                 _df(spark, rows),
                 str(tmp_path / "corpus"),
                 str(tmp_path / "bands"),
+                0,
             ).collect()
         }
         assert got == {
@@ -252,7 +309,7 @@ class TestDistributedGreedy:
     def test_cross_batch_and_redelivery(self, spark, tmp_path, monkeypatch):
         self._force_distributed(monkeypatch)
         corpus, bands = str(tmp_path / "corpus"), str(tmp_path / "bands")
-        neardup_batch(spark, _df(spark, [(1, DOC_A)]), corpus, bands).collect()
+        neardup_batch(spark, _df(spark, [(1, DOC_A)]), corpus, bands, 0).collect()
         d2 = {
             r["doc_id"]: (r["kept"], r["dup_of"])
             for r in neardup_batch(
@@ -260,6 +317,7 @@ class TestDistributedGreedy:
                 _df(spark, [(1, DOC_A), (10, DOC_B), (11, DOC_D)]),
                 corpus,
                 bands,
+                1,
             ).collect()
         }
         assert d2[1] == (False, 1)  # redelivery: store copy wins
@@ -278,6 +336,7 @@ class TestDistributedGreedy:
                 docs,
                 str(tmp_path / f"corpus_{sub}"),
                 str(tmp_path / f"bands_{sub}"),
+                0,
             ).collect()
             return {r["doc_id"]: (r["kept"], r["dup_of"]) for r in d}
 
@@ -391,7 +450,7 @@ class TestRedeliveryShingleDedup:
     def test_borderline_pair_survives_redelivery(self, spark, tmp_path):
         corpus, bands = str(tmp_path / "corpus"), str(tmp_path / "bands")
         d1 = neardup_batch(
-            spark, _df(spark, [(1, self.DOC_P)]), corpus, bands
+            spark, _df(spark, [(1, self.DOC_P)]), corpus, bands, 0
         ).collect()
         assert d1[0]["kept"] is True
         # batch 2: doc 1 REDELIVERED + doc 2 at true J=0.44 vs doc 1
@@ -402,6 +461,7 @@ class TestRedeliveryShingleDedup:
                 _df(spark, [(1, self.DOC_P), (2, self.DOC_Q)]),
                 corpus,
                 bands,
+                1,
             ).collect()
         }
         assert d2[1] == (False, 1)  # redelivery cross-rejected

@@ -13,8 +13,14 @@ from pyspark.sql import functions as F
 
 from batch_processing_system_spark.engine.det import epoch_us
 from batch_processing_system_spark.engine.io import load_table
+from batch_processing_system_spark.pipeline.statestore import read_latest
 from batch_processing_system_spark.queries.wrangling import r04_scd2
-from batch_processing_system_spark.streaming.scd2 import run_scd2_stream
+from batch_processing_system_spark.streaming.scd2 import (
+    INTERVAL_KEYS,
+    INTERVAL_SCHEMA,
+    SCD2_WIRE_SCHEMA,
+    run_scd2_stream,
+)
 
 from .conftest import SF_SMALL
 
@@ -57,8 +63,13 @@ def _replay(spark, waves, incoming, store, ckpt):
 
     for w in waves:
         shutil.copy(w, incoming)
-        q = run_scd2_stream(spark, str(incoming), str(store), str(ckpt)).start()
+        src = spark.readStream.schema(SCD2_WIRE_SCHEMA).json(str(incoming))
+        q = run_scd2_stream(src, str(store), str(ckpt)).start()
         q.awaitTermination(120)
+
+
+def _read_store(spark, store):
+    return read_latest(spark, str(store), INTERVAL_SCHEMA, INTERVAL_KEYS)
 
 
 def _interval_set(df):
@@ -81,7 +92,7 @@ class TestScd2Stream:
         incoming.mkdir()
         store = tmp_path / "scd2_store"
         _replay(spark, waves, incoming, store, tmp_path / "ckpt")
-        got = _interval_set(spark.read.parquet(str(store)))
+        got = _interval_set(_read_store(spark, store))
         want = _interval_set(r04_scd2(spark, SF_SMALL))
         assert got == want
 
@@ -94,7 +105,7 @@ class TestScd2Stream:
         incoming.mkdir()
         store = tmp_path / "scd2_store"
         _replay(spark, waves[:1], incoming, store, tmp_path / "ckpt")
-        partial = spark.read.parquet(str(store))
+        partial = _read_store(spark, store)
         closed = {
             t
             for t in _interval_set(partial)
@@ -110,7 +121,7 @@ class TestScd2Stream:
         incoming.mkdir()
         store = tmp_path / "scd2_store"
         _replay(spark, waves, incoming, store, tmp_path / "ckpt")
-        df = spark.read.parquet(str(store))
+        df = _read_store(spark, store)
         open_counts = (
             df.filter(F.col("is_current"))
             .groupBy("user_id")

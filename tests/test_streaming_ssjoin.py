@@ -11,7 +11,9 @@ from datetime import datetime, timedelta
 
 import pytest
 
+from batch_processing_system_spark.pipeline.statestore import read_bid_store
 from batch_processing_system_spark.streaming.ssjoin import (
+    JOINED_SCHEMA,
     REQUEST_WIRE_SCHEMA,
     RESULT_WIRE_SCHEMA,
     join_requests_results,
@@ -158,9 +160,12 @@ class TestStreamStreamJoin:
         )
         out = tmp_path / f"out_{how}"
         q = run_request_result_join_stream(
-            spark,
-            str(tmp_path / "reqs"),
-            str(tmp_path / "ress"),
+            spark.readStream.schema(REQUEST_WIRE_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(tmp_path / "reqs")),
+            spark.readStream.schema(RESULT_WIRE_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(tmp_path / "ress")),
             str(out),
             str(tmp_path / f"ckpt_{how}"),
             HORIZON,
@@ -169,7 +174,7 @@ class TestStreamStreamJoin:
         ).start()
         q.awaitTermination()
         progress = q.lastProgress
-        got = _rows(spark.read.parquet(str(out)))
+        got = _rows(read_bid_store(spark, str(out), JOINED_SCHEMA))
         assert got == expected
         if how == "inner":
             # 2/3 of the 300 requests answered inside the horizon
